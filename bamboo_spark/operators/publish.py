@@ -39,6 +39,7 @@ readers a free contract check.
 from __future__ import annotations
 
 import json
+import logging
 import os
 
 from typing import Dict, List, Optional
@@ -46,6 +47,8 @@ from typing import Dict, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from bamboo_spark._localdf import local_df as _local_df
+
+_log = logging.getLogger(__name__)
 
 _MANIFEST = "manifest.json"
 
@@ -455,11 +458,8 @@ def current_version(
     table_dir: str, spark: Optional[SparkSession] = None
 ) -> int:
     """Committed snapshot version, 0 if the table doesn't exist yet."""
-    fs = _fs_for(table_dir, spark)
-    try:
-        return int(json.loads(fs.read_text(_manifest_path(table_dir, fs)))["version"])
-    except Exception:
-        return 0
+    manifest = _read_manifest(table_dir, _fs_for(table_dir, spark))
+    return int(manifest["version"]) if manifest else 0
 
 
 _FORMAT_VERSION = 1  # manifest protocol this reader/writer speaks
@@ -472,12 +472,46 @@ class UnsupportedFormatError(RuntimeError):
     this reader's resolution would return WRONG rows, not an error)."""
 
 
+class UnreadableManifestError(RuntimeError):
+    """The table's manifest exists but cannot be read or parsed. Only a
+    MISSING manifest means "no table" — reading a damaged one as absent
+    would let the next write commit version 1 over the table's
+    history."""
+
+
+def _is_not_found(exc: Exception) -> bool:
+    """True for a backend's "no such file": POSIX ``FileNotFoundError``
+    or a JVM ``java.io.FileNotFoundException`` (or subclass) raised
+    through the Hadoop FS."""
+    if isinstance(exc, FileNotFoundError):
+        return True
+    java = getattr(exc, "java_exception", None)
+    cls = java.getClass() if java is not None else None
+    while cls is not None:
+        if cls.getName() == "java.io.FileNotFoundException":
+            return True
+        cls = cls.getSuperclass()
+    return False
+
+
 def _read_manifest(table_dir: str, fs) -> Optional[dict]:
+    path = _manifest_path(table_dir, fs)
     try:
-        man = json.loads(fs.read_text(_manifest_path(table_dir, fs)))
-    except Exception:
-        return None
-    fv = int(man.get("format_version") or 1)
+        text = fs.read_text(path)
+    except Exception as e:
+        if _is_not_found(e):
+            return None
+        raise UnreadableManifestError(
+            "cannot read manifest %s: %s" % (path, e)
+        ) from e
+    try:
+        man = json.loads(text)
+        fv = int(man.get("format_version") or 1)
+    except (ValueError, TypeError, AttributeError) as e:
+        raise UnreadableManifestError(
+            "manifest %s does not parse (%s) — refusing to treat the "
+            "table as absent" % (path, e)
+        ) from e
     if fv > _FORMAT_VERSION:
         raise UnsupportedFormatError(
             "table at %s uses manifest format_version=%d; this reader "
@@ -579,6 +613,17 @@ def _write_dv(fs, table_dir: str, seg: str, dvmap: dict) -> str:
     return rel
 
 
+def _dv_entry(fs, table_dir: str, seg: str, dvmap: dict) -> dict:
+    """Entry fields citing ``dvmap`` as this version's dv manifest —
+    ``{}`` when it is empty."""
+    if not dvmap:
+        return {}
+    return {
+        "dv": _write_dv(fs, table_dir, seg, dvmap),
+        "dv_rows": _dv_nrows(dvmap),
+    }
+
+
 def _carry_dv(fs, table_dir: str, prev: dict, seg: str, live_files) -> dict:
     """Entry fields carrying ``prev``'s delete vectors forward through
     a commit that keeps (some of) its files: vectors for files no
@@ -586,19 +631,12 @@ def _carry_dv(fs, table_dir: str, prev: dict, seg: str, live_files) -> dict:
     deletion), the rest are re-published as this version's dv manifest
     — a METADATA-ONLY filter for v2 refs (sidecar data is never
     rewritten). Returns ``{}`` or ``{'dv': relpath, 'dv_rows': n}``."""
-    prev_dv = _load_dv(fs, table_dir, prev)
-    if not prev_dv:
-        return {}
     live = set(live_files)
-    kept = {
-        f: v for f, v in prev_dv.items() if f in live and _dv_val_n(v)
-    }
-    if not kept:
-        return {}
-    return {
-        "dv": _write_dv(fs, table_dir, seg, kept),
-        "dv_rows": _dv_nrows(kept),
-    }
+    return _dv_entry(fs, table_dir, seg, {
+        f: v
+        for f, v in _load_dv(fs, table_dir, prev).items()
+        if f in live and _dv_val_n(v)
+    })
 
 
 def _dv_val_n(v) -> int:
@@ -1151,14 +1189,14 @@ def _constraint_aggs(prev: Optional[dict]):
 
 def _enforce_constraints(obs_row, names, cons, who: str) -> None:
     """Raise BEFORE the commit when any violation counter is nonzero —
-    the staged files become vacuum garbage, the table never sees the
-    bad rows."""
+    the staged files are reclaimed, the table never sees the bad
+    rows."""
     for i, name in enumerate(names):
         bad = int(obs_row.get("_c%d" % i) or 0)
         if bad:
             raise ValueError(
                 "%s: CHECK constraint %r (%s) violated by %d row(s) — "
-                "nothing committed (staged files are vacuum garbage)"
+                "nothing committed"
                 % (who, name, cons[name], bad)
             )
 
@@ -2114,15 +2152,11 @@ def atomic_publish(
     history iff its publish committed. ``read_published(version=k)``
     reads any retained snapshot; ``vacuum`` prunes history entries
     whose data directories it deletes."""
-    from pyspark.sql import Observation, functions as F
-
     fs = _fs_for(table_dir, df.sparkSession)
     fs.mkdirs(table_dir)
     lease = _lease or _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire()
     try:
         prev = _read_manifest(table_dir, fs)
-        seg = _claim_vdir(fs, table_dir, _next_version(fs, table_dir, prev))
-        vdir = fs.join(table_dir, seg)
         # hidden partitioning: resolve layout + transform spec; df
         # stays LOGICAL (derived columns live only in directory names)
         # and the materialized twin is what hits the writer. A caller
@@ -2139,80 +2173,60 @@ def atomic_publish(
             parts, spec = _parse_partition_by(
                 partition_by, df.schema.json() if partition_by else None
             )
-        obs = Observation()
-        cnames, cmap, caggs = _constraint_aggs(prev)
         staged = _materialize_partition_cols(df, spec)
         if not _keep_layout:
             # callers that pre-laid-out the frame (compact's byte-sized
             # range layout, zorder clustering) pass _keep_layout=True
             staged = _pt_rebalance(staged, parts)
-        writer = staged.observe(
-            obs, F.count(F.lit(1)).alias("n"), *caggs
-        ).write
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(vdir)
-        _enforce_constraints(obs.get, cnames, cmap, "atomic_publish")
-        n_rows = int(obs.get["n"])
-        files, file_sizes = _scan_written(fs, vdir, seg)
-        seg_data = {"files": files, "file_sizes": file_sizes}
-        # WRITE-TIME indexes: distributed jobs over the files this
-        # publish just produced — every backend; skip=/skip_eq= prune
-        # from the first read. Explicit cols on a full publish DEFINE
-        # the table's index spec (persisted; every later write flavor
-        # defaults to it); absent args inherit the previous spec.
-        explicit = _set_index_spec and (
-            stats_cols is not None or bloom_cols is not None
-        )
-        stats_cols, bloom_cols = _index_defaults(
-            prev, stats_cols, bloom_cols, df.schema.json()
-        )
-        _enrich_seg(
-            df.sparkSession, fs, table_dir, files, seg_data,
-            stats_cols, bloom_cols, df.schema.json(),
-        )
-        # a full rewrite starts the field-id space fresh (physical ==
-        # logical again) and resets the evolution flags — nothing of
-        # the old layout survives to resurrect
-        fids = {f.name: i + 1 for i, f in enumerate(df.schema.fields)}
-        _stamp_fields(seg_data, fids)
-        _write_seg(fs, table_dir, seg, seg_data)
-        entry = {
-            "segments": [seg],
-            "removed": [],
-            "n_rows": n_rows,
-            "n_files": len(files),
-            "size_bytes": sum(file_sizes.values()),
-            "schema": df.schema.json(),
-            "partition_by": parts,
-            "operation": operation,
-            "field_ids": fids,
-            "next_field_id": len(fids) + 1,
-            "schema_evolved": False,
-            "retired_names": [],
-        }
-        if spec:
-            entry["partition_spec"] = spec
-        if explicit:
-            entry["index_cols"] = {
-                "stats": list(stats_cols or []),
-                "bloom": list(bloom_cols or []),
+        # the lease is held from read to swap: no rebase, ever
+        with _Stage(
+            fs, table_dir, prev, "atomic_publish", lease_ttl_ms, lease=lease
+        ) as st:
+            st.write(staged, parts)
+            # a full rewrite starts the field-id space fresh (physical
+            # == logical again) and resets the evolution flags —
+            # nothing of the old layout survives to resurrect
+            fids = {f.name: i + 1 for i, f in enumerate(df.schema.fields)}
+            # WRITE-TIME indexes: explicit cols on a full publish DEFINE
+            # the table's index spec (persisted; every later write
+            # flavor defaults to it); absent args inherit the previous
+            explicit = _set_index_spec and (
+                stats_cols is not None or bloom_cols is not None
+            )
+            stats_cols, bloom_cols = st.index(
+                df.sparkSession, df.schema.json(), fids, stats_cols,
+                bloom_cols,
+            )
+            entry = {
+                "segments": st.cite([]),
+                "removed": [],
+                "n_rows": st.n_rows,
+                "n_files": len(st.files),
+                "size_bytes": sum(st.sizes.values()),
+                "schema": df.schema.json(),
+                "partition_by": parts,
+                "operation": operation,
+                "field_ids": fids,
+                "next_field_id": len(fids) + 1,
+                "schema_evolved": False,
+                "retired_names": [],
             }
-        if not data_change:
-            # pure-rewrite marker (Delta's dataChange=false): this
-            # commit re-cites existing ROWS in new files; incremental
-            # readers (read_appends, the streaming source) skip it
-            entry["data_change"] = False
-        if meta:
-            entry["meta"] = dict(meta)
-        version = (int(prev["version"]) if prev else 0) + 1
-        _commit(fs, table_dir, prev, version, entry, lease=lease)
-        # commit done: the staging dir now exists and is referenced,
-        # so the claim marker's job (name uniqueness + in-flight
-        # liveness for vacuum) is over — release it so vacuum can
-        # tell committed dirs from in-flight staging writes
-        fs.delete_file(fs.join(table_dir, seg + ".claim"))
-        return version
+            if spec:
+                entry["partition_spec"] = spec
+            if explicit:
+                entry["index_cols"] = {
+                    "stats": list(stats_cols or []),
+                    "bloom": list(bloom_cols or []),
+                }
+            if not data_change:
+                # pure-rewrite marker (Delta's dataChange=false):
+                # this commit re-cites existing ROWS in new files;
+                # incremental readers (read_appends, the streaming
+                # source) skip it
+                entry["data_change"] = False
+            if meta:
+                entry["meta"] = dict(meta)
+            return st.commit(lambda prev: entry)
     finally:
         if _lease is None:
             lease.release()
@@ -2308,16 +2322,205 @@ class _ClaimBeat:
             self._thread = None
 
 
+def _hidden(component: str) -> bool:
+    """Spark's hidden-path rule: a leading ``.``, or a leading ``_``
+    that is not a hive ``col=value`` dir."""
+    return component.startswith(".") or (
+        component.startswith("_") and "=" not in component
+    )
+
+
 def _scan_written(fs, vdir: str, vname: str):
-    """(manifest-relative file list, {path: bytes}) for a freshly
-    written version directory."""
-    rel = sorted(f for f in fs.walk_files(vdir) if f.endswith(".parquet"))
+    """(manifest-relative file list, {path: bytes}) for the data files
+    of a freshly written version directory. Paths under a hidden
+    component are not data: a merge's ``_dvp`` delete-vector sidecar
+    and any job's ``_temporary`` attempt files share the staged dir."""
+    rel = sorted(
+        f
+        for f in fs.walk_files(vdir)
+        if f.endswith(".parquet")
+        and not any(_hidden(c) for c in f.split("/"))
+    )
     files = ["%s/%s" % (vname, f) for f in rel]
     sizes = {
         "%s/%s" % (vname, f): fs.file_size(fs.join(vdir, f))
         for f in rel
     }
     return files, sizes
+
+
+class _Stage:
+    """The staged-commit protocol every data-writing publish flavor
+    shares, used as ``with _Stage(...) as st:``.
+
+    * Entering claims a ``_v<N>`` dir (exclusive-create ``.claim``),
+      creates it, and starts the claim heartbeat that tells ``vacuum``
+      the dir is in flight. The claim makes the dir this writer's
+      alone, so every write into it appends.
+    * :meth:`write` is the observed data write — the row count and
+      one CHECK-violation counter per table constraint ride the write
+      job — then lists the written data files; :meth:`index` writes
+      their segment sidecar (sizes, write-time indexes, field ids).
+    * :meth:`commit` swaps the next snapshot in under the short commit
+      lease. When the table moved since ``base`` it rebases only if
+      schema and layout are unchanged and the flavor's conflict check
+      passes.
+
+    Reclaim: leaving without a manifest swap — on any exception, or
+    when the flavor found nothing to commit — stops the heartbeat,
+    joins a running :meth:`submit` job, and deletes the claim and the
+    staged dir, logging any cleanup failure; the original error
+    propagates. Once the swap has started the dir is never deleted:
+    the manifest may cite it."""
+
+    def __init__(self, fs, table_dir: str, base, who: str, lease_ttl_ms: int,
+                 lease: Optional[_Lease] = None):
+        self.fs = fs
+        self.table_dir = table_dir
+        self.base = base  # the snapshot the flavor planned against
+        self.who = who
+        self.n_rows = 0
+        self.files: List[str] = []
+        self.sizes: Dict[str, int] = {}
+        self._ttl_ms = lease_ttl_ms
+        self._lease = lease  # held by the caller: commit under it
+        self._pool = None
+        self._swapped = False
+
+    def __enter__(self) -> "_Stage":
+        fs, t = self.fs, self.table_dir
+        self.seg = _claim_vdir(fs, t, _next_version(fs, t, self.base))
+        self.vdir = fs.join(t, self.seg)
+        self._beat = _ClaimBeat(fs, t, self.seg, self._ttl_ms).start()
+        try:
+            fs.mkdirs(self.vdir)
+        except BaseException:
+            self.__exit__(None, None, None)
+            raise
+        return self
+
+    def __exit__(self, *exc) -> None:
+        # beat first: a touch landing after the delete would recreate
+        # the claim; the pool join keeps the rmtree off in-flight writes
+        self._beat.stop()
+        if self._pool is not None:
+            self._pool.shutdown(wait=True)
+        if self._swapped:
+            return
+        for what, drop, path in (
+            ("claim", self.fs.delete_file, self.vdir + ".claim"),
+            ("staged dir", self.fs.rmtree, self.vdir),
+        ):
+            try:
+                drop(path)
+            except Exception:
+                _log.warning(
+                    "%s: could not reclaim %s %s", self.who, what, path,
+                    exc_info=True,
+                )
+
+    def submit(self, fn, *args):
+        """Run ``fn(*args)`` on a second driver thread beside the data
+        write (its jobs back-fill slots the write's tail leaves idle);
+        returns the future."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        self._pool = ThreadPoolExecutor(max_workers=1)
+        return self._pool.submit(fn, *args)
+
+    def write(self, df: DataFrame, parts) -> None:
+        """Append ``df`` — already laid out by the flavor — to the
+        staged dir, refuse constraint violations, and record ``n_rows``,
+        ``files`` and ``sizes``."""
+        from pyspark.sql import Observation, functions as F
+
+        obs = Observation()
+        names, cons, aggs = _constraint_aggs(self.base)
+        writer = df.observe(
+            obs, F.count(F.lit(1)).alias("n"), *aggs
+        ).write.mode("append")
+        if parts:
+            writer = writer.partitionBy(*parts)
+        writer.parquet(self.vdir)
+        _enforce_constraints(obs.get, names, cons, self.who)
+        self.n_rows = int(obs.get["n"])
+        self.files, self.sizes = _scan_written(self.fs, self.vdir, self.seg)
+
+    def index(self, spark, schema_json: str, fids: dict, stats_cols,
+              bloom_cols):
+        """Write the staged files' segment sidecar (none when the write
+        produced no file): sizes, write-time min/max stats and blooms
+        (explicit columns, else the table's index spec), and the
+        ``{field id: name}`` stamp. Returns the resolved
+        ``(stats_cols, bloom_cols)``."""
+        sc, bc = _index_defaults(self.base, stats_cols, bloom_cols, schema_json)
+        if self.files:
+            seg_data = {"files": self.files, "file_sizes": self.sizes}
+            _enrich_seg(
+                spark, self.fs, self.table_dir, self.files, seg_data,
+                sc, bc, schema_json,
+            )
+            _stamp_fields(seg_data, fids)
+            _write_seg(self.fs, self.table_dir, self.seg, seg_data)
+        return sc, bc
+
+    def cite(self, segs) -> List[str]:
+        """``segs`` plus this stage's segment when it wrote any file."""
+        return list(segs) + ([self.seg] if self.files else [])
+
+    def commit(self, entry_of, rebase=None) -> int:
+        """Commit ``entry_of(prev)`` as version ``prev + 1``, where
+        ``prev`` is ``base`` — or, when the table moved meanwhile, the
+        current snapshot, provided ``_check_rebase`` passes and
+        ``rebase(cur)`` raises no :class:`ConcurrentWriteError`. With
+        ``rebase=None`` a moved table is refused."""
+
+        def main_swap(cur, lease):
+            prev = self.base
+            # without a rebase check a moved table reaches _commit's CAS
+            # against the stale base, which refuses it
+            if rebase is not None and int(cur["version"]) != int(prev["version"]):
+                _check_rebase(prev, cur, self.who)
+                rebase(cur)
+                prev = cur
+            version = (int(prev["version"]) if prev else 0) + 1
+            entry = entry_of(prev)
+            self.swap(_commit, self.fs, self.table_dir, prev, version,
+                      entry, lease=lease)
+            return version
+
+        return self.under_lease(main_swap)
+
+    def under_lease(self, fn):
+        """``fn(current manifest, lease)`` inside the commit lease (the
+        caller's, or a short one waited for), then release the claim —
+        the committed dir no longer needs it."""
+        lease = self._lease or _Lease(
+            self.fs, self.table_dir, ttl_ms=self._ttl_ms
+        ).acquire_wait(wait_ms=_COMMIT_WAIT_MS)
+        try:
+            cur = _read_manifest(self.table_dir, self.fs)
+            if cur is None and self.base is not None:
+                raise ConcurrentWriteError(
+                    "%s: table manifest vanished mid-write" % self.who
+                )
+            out = fn(cur, lease)
+            self.fs.delete_file(self.vdir + ".claim")
+            return out
+        finally:
+            if self._lease is None:
+                lease.release()
+
+    def swap(self, fn, *args, **kw):
+        """Run the manifest swap ``fn``. Its CAS refusals raise
+        :class:`ConcurrentWriteError` before anything is written, so only
+        they leave the staged dir reclaimable."""
+        self._swapped = True
+        try:
+            return fn(*args, **kw)
+        except ConcurrentWriteError:
+            self._swapped = False
+            raise
 
 
 def _commit(
@@ -2332,8 +2535,8 @@ def _commit(
     token). Without this, a writer whose lease was TTL-broken mid-write
     would finish, swap, and silently erase the breaker's committed
     snapshot — the version number would even go BACKWARDS. With it,
-    the evicted writer raises :class:`ConcurrentWriteError`; its orphan
-    ``_v<N>`` dir is garbage the next ``vacuum`` removes."""
+    the evicted writer raises :class:`ConcurrentWriteError` before
+    anything is written, and its staging reclaims the ``_v<N>`` dir."""
     cur = _read_manifest(table_dir, fs)
     cur_v = int(cur["version"]) if cur else 0
     prev_v = int(prev["version"]) if prev else 0
@@ -2446,8 +2649,6 @@ def append_publish(
     partition layout); a concurrent schema/layout change raises
     :class:`ConcurrentWriteError`. Streaming ingest therefore commits
     concurrently with partition maintenance on other partitions."""
-    from pyspark.sql import Observation, functions as F
-
     fs = _fs_for(table_dir, df.sparkSession)
     fs.mkdirs(table_dir)
     prev = _read_manifest(table_dir, fs)
@@ -2460,64 +2661,15 @@ def append_publish(
     parts = prev.get("partition_by") or []
     schema_json = prev["schema"]
     if schema_mode == "merge":
-        from pyspark.sql import types as T
-
-        old = T.StructType.fromJson(json.loads(schema_json))
-        old_names = {f.name for f in old.fields}
-        new_by_name = {f.name: f for f in df.schema.fields}
-        widened: dict = {}
-        for f in old.fields:
-            nf = new_by_name.get(f.name)
-            if nf is None or nf.dataType == f.dataType:
-                continue
-            ot, nt = f.dataType.jsonValue(), nf.dataType.jsonValue()
-            if _can_widen(ot, nt):
-                # batch arrived WIDER (int→long etc.): widen the table
-                # type in the same commit — same rules as widen_column
-                # and the merge paths; zero data IO (narrow files read
-                # natively upcast)
-                widened[f.name] = nf.dataType
-            elif _can_widen(nt, ot):
-                pass  # narrower batch casts up in the align below
-            else:
-                raise ValueError(
-                    "append_publish(merge): column %r type change "
-                    "%s -> %s is neither a supported widening "
-                    "(byte→short→int→long, float→double, int→double) "
-                    "nor a narrower type castable to the table's"
-                    % (f.name, f.dataType, nf.dataType)
-                )
-        added = [
-            f for f in df.schema.fields if f.name not in old_names
-        ]
-        union = T.StructType(
-            [
-                T.StructField(
-                    f.name, widened.get(f.name, f.dataType),
-                    f.nullable, f.metadata,
-                )
-                for f in old.fields
-            ]
-            + [T.StructField(f.name, f.dataType, True) for f in added]
+        # ADD-ONLY evolution plus type widening: a batch arriving WIDER
+        # (int→long etc.) widens the table type in the same commit,
+        # zero data IO (narrow files read natively upcast); a narrower
+        # batch casts up in the align — the merge paths' rules
+        widened, _ = _widen_schema(
+            prev, json.loads(df.schema.json())["fields"], "append_publish"
         )
-        df = df.select(
-            *[
-                F.col(f.name).cast(f.dataType)
-                if f.name in df.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in union.fields
-            ]
-        )
-        schema_json = union.json()
-        retired = set(prev.get("retired_names") or [])
-        readded = [f.name for f in added if f.name in retired]
-        if readded:
-            raise ValueError(
-                "append_publish(merge): column name(s) %s were dropped "
-                "or renamed away earlier — re-adding the name would "
-                "resurrect old bytes on pre-evolution segments; pick a "
-                "new name" % readded
-            )
+        schema_json = widened or schema_json
+        df = _align_to(df, schema_json)
     else:
         # strict = full NAME + TYPE equality (nullability and field
         # metadata excluded). Name-only comparison would let a batch
@@ -2542,8 +2694,6 @@ def append_publish(
     # ---- data-write phase: NO lease held. The batch stages into a
     # CLAIMED directory (unique by exclusive-create), so concurrent
     # writers never collide on disk; only the manifest swap contends.
-    # The claim heartbeat is the staging dir's liveness signal: vacuum
-    # never reclaims a dir whose claim is fresher than the lease TTL.
     pspec = prev.get("partition_spec")
     df = _materialize_partition_cols(df, pspec)
     if cluster_by:
@@ -2559,78 +2709,26 @@ def append_publish(
         ).sortWithinPartitions(*cl)
     else:
         df = _pt_rebalance(df, parts)
-    seg = _claim_vdir(fs, table_dir, _next_version(fs, table_dir, prev))
-    beat = _ClaimBeat(fs, table_dir, seg, lease_ttl_ms).start()
-    try:
-        vdir = fs.join(table_dir, seg)
-        obs = Observation()
-        cnames, cmap, caggs = _constraint_aggs(prev)
-        writer = df.observe(
-            obs, F.count(F.lit(1)).alias("n"), *caggs
-        ).write
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(vdir)
-        _enforce_constraints(obs.get, cnames, cmap, "append_publish")
-        new_files, new_sizes = _scan_written(fs, vdir, seg)
+    fids, nxt = _field_ids_of(prev)
+    for name in [f["name"] for f in json.loads(schema_json)["fields"]]:
+        if name not in fids:  # widened this commit: new id
+            fids[name] = nxt
+            nxt += 1
+    with _Stage(fs, table_dir, prev, "append_publish", lease_ttl_ms) as st:
+        st.write(df, parts)
         # O(delta) commit: carried files stay inside their segment
         # sidecars BY REFERENCE — the commit writes ONE new sidecar
         # (this batch's files) and a constant-size top-manifest entry;
         # nothing existing is re-listed, re-read, or re-serialized
-        fids, nxt = _field_ids_of({**prev, "schema": prev["schema"]})
-        for name in [
-            f["name"] for f in json.loads(schema_json)["fields"]
-        ]:
-            if name not in fids:  # widened this commit: new id
-                fids[name] = nxt
-                nxt += 1
-        if new_files:
-            seg_data = {"files": new_files, "file_sizes": new_sizes}
-            sc, bc = _index_defaults(
-                prev, stats_cols, bloom_cols, schema_json
+        st.index(df.sparkSession, schema_json, fids, stats_cols, bloom_cols)
+
+        def entry_of(prev):
+            entry = _grow_entry(
+                fs, table_dir, prev, st, "append",
+                int(prev["n_rows"]) + st.n_rows, schema_json,
             )
-            _enrich_seg(
-                df.sparkSession, fs, table_dir, new_files, seg_data,
-                sc, bc, schema_json,
-            )
-            _stamp_fields(seg_data, fids)
-            _write_seg(fs, table_dir, seg, seg_data)
-        # ---- commit phase: short lease, optimistic rebase. An append
-        # adds files and removes none, so it commutes with ANY
-        # concurrent commit that kept the schema and partition layout —
-        # rebase and commit. acquire_wait: the lease only guards
-        # sub-second swaps now, so a contending writer polls briefly
-        # instead of aborting its write.
-        lease = _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
-            wait_ms=_COMMIT_WAIT_MS
-        )
-        with lease:
-            cur = _read_manifest(table_dir, fs)
-            if cur is None:
-                raise ConcurrentWriteError(
-                    "append_publish: table manifest vanished mid-append"
-                )
-            if int(cur["version"]) != int(prev["version"]):
-                _check_rebase(prev, cur, "append_publish")
-                prev = cur
-            segs, removed = _segments_of(fs, table_dir, prev)
-            if new_files:
-                segs = segs + [seg]
-            prev_nf, prev_sz = _entry_counters(fs, table_dir, prev)
-            entry = {
-                "segments": segs,
-                "removed": removed,
-                "n_rows": int(prev["n_rows"]) + int(obs.get["n"]),
-                "n_files": prev_nf + len(new_files),
-                "size_bytes": prev_sz + sum(new_sizes.values()),
-                "schema": schema_json,
-                "partition_by": parts,
-                "operation": "append",
-                "field_ids": fids,
-                "next_field_id": nxt,
-            }
-            if pspec:
-                entry["partition_spec"] = pspec
+            entry["field_ids"] = fids
+            entry["next_field_id"] = nxt
             # delete vectors carry UNCHANGED by reference — an append
             # adds files and touches none, so the prev snapshot's dv
             # file is this snapshot's dv file (zero IO)
@@ -2639,16 +2737,11 @@ def append_publish(
                 entry["dv_rows"] = prev.get("dv_rows")
             if meta:
                 entry["meta"] = dict(meta)
-            version = int(prev["version"]) + 1
-            _commit(fs, table_dir, prev, version, entry, lease=lease)
-            # commit done: the staging dir now exists and is referenced,
-            # so the claim marker's job (name uniqueness + in-flight
-            # liveness for vacuum) is over — release it so vacuum can
-            # tell committed dirs from in-flight staging writes
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-            return version
-    finally:
-        beat.stop()
+            return entry
+
+        # an append adds files and removes none, so it commutes with
+        # ANY concurrent commit that kept the schema and layout
+        return st.commit(entry_of, rebase=lambda cur: None)
 
 
 def _check_rebase(base: dict, cur: dict, who: str) -> None:
@@ -2670,6 +2763,96 @@ def _check_rebase(base: dict, cur: dict, who: str) -> None:
             "%s: concurrent partition-transform change — rebase refused"
             % who
         )
+
+
+def _files_unchanged(fs, table_dir: str, base: dict, cur: dict, files,
+                     who: str) -> None:
+    """Rebase check for a commit that rewrites or addresses ``files``
+    of ``base``: each must still be live in ``cur`` with the delete
+    vector it had in ``base``. A concurrent rewrite makes addresses
+    stale; a concurrent delete changed live rows under the plan —
+    either way, re-run."""
+    files = set(files)
+    if not files <= set(_entry_files(fs, table_dir, cur)):
+        raise ConcurrentWriteError(
+            "%s: a concurrent commit rewrote file(s) this commit "
+            "targets — re-run against the new snapshot" % who
+        )
+    base_dv = _load_dv(fs, table_dir, base)
+    cur_dv = _load_dv(fs, table_dir, cur)
+    if any((base_dv.get(f) or None) != (cur_dv.get(f) or None) for f in files):
+        raise ConcurrentWriteError(
+            "%s: a concurrent delete changed a targeted file's delete "
+            "vectors — re-run against the new snapshot" % who
+        )
+
+
+def _grow_entry(fs, table_dir: str, prev: dict, st: "_Stage",
+                operation: str, n_rows: int,
+                schema_json: Optional[str] = None) -> dict:
+    """Entry for a commit over ``prev`` that carries every live file by
+    reference (in its segment) and adds the stage's files: O(delta)
+    commit IO whatever the table size. Layout carries; the schema does
+    too unless the commit widened it."""
+    segs, removed = _segments_of(fs, table_dir, prev)
+    prev_nf, prev_sz = _entry_counters(fs, table_dir, prev)
+    entry = {
+        "segments": st.cite(segs),
+        "removed": removed,
+        "n_rows": n_rows,
+        "n_files": prev_nf + len(st.files),
+        "size_bytes": prev_sz + sum(st.sizes.values()),
+        "schema": schema_json or prev["schema"],
+        "partition_by": prev.get("partition_by") or [],
+        "operation": operation,
+    }
+    if prev.get("partition_spec"):
+        entry["partition_spec"] = prev["partition_spec"]
+    return entry
+
+
+def _replace_entry(fs, table_dir: str, prev: dict, st: "_Stage",
+                   is_replaced, operation: str, data_change: bool,
+                   meta: Optional[dict] = None) -> dict:
+    """Entry for a copy-on-write rewrite over ``prev``: the live files
+    ``is_replaced`` selects leave, the stage's files arrive, everything
+    else (with its delete vectors) carries by reference. Replaced rows
+    are footer rows less their delete vectors — metadata reads, no
+    scan — so ``n_rows = prev - replaced + new`` stays exact."""
+    res = _resolve_entry(fs, table_dir, prev)
+    prev_dv = _load_dv(fs, table_dir, prev)
+    replaced = [f for f in res["files"] if is_replaced(f)]
+    replaced_rows = sum(
+        fs.file_rows(_ref_path(fs, table_dir, f)) - _dv_val_n(prev_dv.get(f))
+        for f in replaced
+    )
+    entry = _grow_entry(
+        fs, table_dir, prev, st, operation,
+        int(prev["n_rows"]) - replaced_rows + st.n_rows,
+    )
+    # prune segments whose files are now ALL removed (a compacted or
+    # fully-replaced version): drops the segment pointer and its
+    # entries from the removed list, keeping 'removed' bounded by the
+    # files replaced since the last fold, not table lifetime
+    entry["segments"], entry["removed"] = _prune_segments(
+        fs, table_dir, entry["segments"],
+        sorted(set(entry["removed"]) | set(replaced)),
+    )
+    entry["n_files"] -= len(replaced)
+    entry["size_bytes"] -= sum(
+        res["file_sizes"].get(f) or fs.file_size(_ref_path(fs, table_dir, f))
+        for f in replaced
+    )
+    entry.update(
+        _carry_dv(
+            fs, table_dir, prev, st.seg, set(res["files"]) - set(replaced)
+        )
+    )
+    if not data_change:
+        entry["data_change"] = False
+    if meta:
+        entry["meta"] = dict(meta)
+    return entry
 
 
 def table_meta(
@@ -2890,8 +3073,6 @@ def replace_partitions_publish(
     raises :class:`ConcurrentWriteError` — nothing is silently
     dropped. This is what lets streaming ingest commit concurrently
     with scheduled per-partition maintenance."""
-    from pyspark.sql import Observation, functions as F
-
     fs = _fs_for(table_dir, df.sparkSession)
     fs.mkdirs(table_dir)
     # _base: the SNAPSHOT THE CALLER'S REWRITE PLAN READ. Maintenance
@@ -2948,137 +3129,51 @@ def replace_partitions_publish(
         )
 
     # ---- data-write phase: no lease (claimed dir, collision-free)
-    seg = _claim_vdir(fs, table_dir, _next_version(fs, table_dir, prev))
-    beat = _ClaimBeat(fs, table_dir, seg, lease_ttl_ms).start()
-    try:
-        vdir = fs.join(table_dir, seg)
-        obs = Observation()
-        cnames, cmap, caggs = _constraint_aggs(prev)
-        (
+    who = "replace_partitions_publish"
+    with _Stage(fs, table_dir, prev, who, lease_ttl_ms, lease=_lease) as st:
+        st.write(
             _pt_rebalance(
                 _materialize_partition_cols(df, prev.get("partition_spec")),
                 parts,
-            )
-            .observe(obs, F.count(F.lit(1)).alias("n"), *caggs)
-            .write.partitionBy(*parts)
-            .parquet(vdir)
+            ),
+            parts,
         )
-        _enforce_constraints(
-            obs.get, cnames, cmap, "replace_partitions_publish"
+        st.index(
+            df.sparkSession, prev["schema"], _field_ids_of(prev)[0],
+            stats_cols, bloom_cols,
         )
-        new_files, new_sizes = _scan_written(fs, vdir, seg)
-        if new_files:
-            seg_data = {"files": new_files, "file_sizes": new_sizes}
-            sc, bc = _index_defaults(
-                prev, stats_cols, bloom_cols, prev["schema"]
-            )
-            _enrich_seg(
-                df.sparkSession, fs, table_dir, new_files, seg_data,
-                sc, bc, prev["schema"],
-            )
-            _stamp_fields(seg_data, _field_ids_of(prev)[0])
-            _write_seg(fs, table_dir, seg, seg_data)
-        # ---- commit phase: short lease + disjointness-checked rebase
         base_touched = {
             f
             for f in _resolve_entry(fs, table_dir, prev)["files"]
             if _val_of(f) in vals
         }
-        lease = _lease or _Lease(
-            fs, table_dir, ttl_ms=lease_ttl_ms
-        ).acquire_wait(wait_ms=_COMMIT_WAIT_MS)
-        try:
-            cur = _read_manifest(table_dir, fs)
-            if cur is None:
-                raise ConcurrentWriteError(
-                    "replace_partitions_publish: manifest vanished mid-write"
-                )
-            if int(cur["version"]) != int(prev["version"]):
-                _check_rebase(prev, cur, "replace_partitions_publish")
-                cur_touched = {
-                    f
-                    for f in _entry_files(fs, table_dir, cur)
-                    if _val_of(f) in vals
-                }
-                if cur_touched != base_touched:
-                    raise ConcurrentWriteError(
-                        "replace_partitions_publish: a concurrent commit "
-                        "changed partition(s) %s between this rewrite's "
-                        "snapshot and its commit — merging would drop those "
-                        "rows; re-run against the new snapshot"
-                        % sorted(vals)
-                    )
-                # same guard for DELETE VECTORS: a concurrent dv-delete on
-                # a touched file changed its live rows without changing the
-                # file set — committing this rewrite (planned from the
-                # pre-delete mask) would resurrect the deleted rows
-                base_dv = _load_dv(fs, table_dir, prev)
-                cur_dv = _load_dv(fs, table_dir, cur)
-                if any(
-                    (base_dv.get(f) or []) != (cur_dv.get(f) or [])
-                    for f in base_touched
-                ):
-                    raise ConcurrentWriteError(
-                        "replace_partitions_publish: a concurrent delete "
-                        "changed a touched partition's delete vectors — "
-                        "re-run against the new snapshot"
-                    )
-                prev = cur
-            res = _resolve_entry(fs, table_dir, prev)
-            prev_dv = _load_dv(fs, table_dir, prev)
-            replaced = [f for f in res["files"] if _val_of(f) in vals]
-            # live rows in a replaced file = footer rows − its delete-
-            # vector entries (the rewrite read the MASKED rows)
-            replaced_rows = sum(
-                fs.file_rows(_ref_path(fs, table_dir, f)) - _dv_val_n(prev_dv.get(f))
-                for f in replaced
-            )
-            replaced_bytes = sum(
-                res["file_sizes"].get(f)
-                or fs.file_size(_ref_path(fs, table_dir, f))
-                for f in replaced
-            )
-            segs, removed = _segments_of(fs, table_dir, prev)
-            removed = sorted(set(removed) | set(replaced))
-            if new_files:
-                segs = segs + [seg]
-            # prune segments whose files are now ALL removed (a compacted
-            # or fully-replaced version): drops the segment pointer and its
-            # entries from the removed list, keeping 'removed' bounded by
-            # the files replaced since the last fold, not table lifetime
-            segs, removed = _prune_segments(fs, table_dir, segs, removed)
-            prev_nf, prev_sz = _entry_counters(fs, table_dir, prev)
-            carried = set(res["files"]) - set(replaced)
-            entry = {
-                "segments": segs,
-                "removed": removed,
-                "n_rows": int(prev["n_rows"]) - replaced_rows + int(obs.get["n"]),
-                "n_files": prev_nf - len(replaced) + len(new_files),
-                "size_bytes": prev_sz - replaced_bytes + sum(new_sizes.values()),
-                "schema": prev["schema"],
-                "partition_by": parts,
-                "operation": operation,
-                **_carry_dv(fs, table_dir, prev, seg, carried),
+
+        def rebase(cur):
+            # disjoint-partition rebase: the concurrent commits must
+            # have left OUR partitions' files alone
+            cur_touched = {
+                f for f in _entry_files(fs, table_dir, cur) if _val_of(f) in vals
             }
-            if prev.get("partition_spec"):
-                entry["partition_spec"] = prev["partition_spec"]
-            if not data_change:
-                entry["data_change"] = False
-            if meta:
-                entry["meta"] = dict(meta)
-            version = int(prev["version"]) + 1
-            _commit(fs, table_dir, prev, version, entry, lease=lease)
-            # commit done: the staging dir now exists and is referenced,
-            # so the claim marker's job (name uniqueness + in-flight
-            # liveness for vacuum) is over — release it so vacuum can
-            # tell committed dirs from in-flight staging writes
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-            return version
-        finally:
-            if _lease is None:
-                lease.release()
-    finally:
-        beat.stop()
+            if cur_touched != base_touched:
+                raise ConcurrentWriteError(
+                    "replace_partitions_publish: a concurrent commit "
+                    "changed partition(s) %s between this rewrite's "
+                    "snapshot and its commit — merging would drop those "
+                    "rows; re-run against the new snapshot" % sorted(vals)
+                )
+            # same guard for DELETE VECTORS: a concurrent dv-delete on
+            # a touched file changed its live rows without changing the
+            # file set — committing this rewrite (planned from the
+            # pre-delete mask) would resurrect the deleted rows
+            _files_unchanged(fs, table_dir, prev, cur, base_touched, who)
+
+        return st.commit(
+            lambda prev: _replace_entry(
+                fs, table_dir, prev, st, lambda f: _val_of(f) in vals,
+                operation, data_change, meta,
+            ),
+            rebase,
+        )
 
 
 def _entry_counters(fs, table_dir: str, entry: dict):
@@ -4385,8 +4480,6 @@ def append_branch(
     seq. Concurrent appends to the SAME branch: the loser's head-CAS
     raises ConcurrentWriteError; concurrent MAIN commits never
     conflict (disjoint state)."""
-    from pyspark.sql import Observation, functions as F
-
     fs = _fs_for(table_dir, df.sparkSession)
     manifest = _read_manifest(table_dir, fs)
     if manifest is None:
@@ -4410,48 +4503,27 @@ def append_branch(
             % (new_sig, old_sig)
         )
     parts = head.get("partition_by") or []
-    pspec = head.get("partition_spec")
     seen_seq = int(br.get("seq", 0))
-    seg = _claim_vdir(fs, table_dir, _next_version(fs, table_dir, manifest))
-    beat = _ClaimBeat(fs, table_dir, seg, lease_ttl_ms).start()
-    try:
-        vdir = fs.join(table_dir, seg)
-        obs = Observation()
-        writer = _pt_rebalance(
-            _materialize_partition_cols(df, pspec), parts
-        ).observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).write
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(vdir)
-        new_files, new_sizes = _scan_written(fs, vdir, seg)
-        fids, nxt = _field_ids_of(head)
-        if new_files:
-            seg_data = {"files": new_files, "file_sizes": new_sizes}
-            sc, bc = _index_defaults(
-                manifest, stats_cols, bloom_cols, head["schema"]
-            )
-            _enrich_seg(
-                df.sparkSession, fs, table_dir, new_files, seg_data,
-                sc, bc, head["schema"],
-            )
-            _stamp_fields(seg_data, fids)
-            _write_seg(fs, table_dir, seg, seg_data)
-        lease = _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
-            wait_ms=_COMMIT_WAIT_MS
+    with _Stage(fs, table_dir, manifest, "append_branch", lease_ttl_ms) as st:
+        st.write(
+            _pt_rebalance(
+                _materialize_partition_cols(df, head.get("partition_spec")),
+                parts,
+            ),
+            parts,
         )
-        try:
-            fresh = _read_manifest(table_dir, fs)
-            if fresh is None:
-                raise ConcurrentWriteError(
-                    "append_branch: manifest vanished mid-write"
-                )
+        st.index(
+            df.sparkSession, head["schema"], _field_ids_of(head)[0],
+            stats_cols, bloom_cols,
+        )
+
+        def head_swap(fresh, lease):
+            # the branch head is the only state this commit changes, so
+            # its seq is the only conflict: main may have moved freely
             cur_br = (fresh.get("branches") or {}).get(name)
             if cur_br is None:
                 raise ConcurrentWriteError(
-                    "append_branch: branch %r was dropped mid-write"
-                    % name
+                    "append_branch: branch %r was dropped mid-write" % name
                 )
             if int(cur_br.get("seq", 0)) != seen_seq:
                 raise ConcurrentWriteError(
@@ -4461,18 +4533,15 @@ def append_branch(
                     % (name, seen_seq, int(cur_br.get("seq", 0)))
                 )
             cur_head = cur_br["head"]
-            segs = list(cur_head.get("segments") or []) + (
-                [seg] if new_files else []
-            )
             new_head = {
                 **cur_head,
-                "segments": segs,
+                "segments": st.cite(cur_head.get("segments") or []),
                 "removed": list(cur_head.get("removed") or []),
-                "n_rows": int(cur_head["n_rows"]) + int(obs.get["n"]),
+                "n_rows": int(cur_head["n_rows"]) + st.n_rows,
                 "n_files": int(cur_head.get("n_files") or 0)
-                + len(new_files),
+                + len(st.files),
                 "size_bytes": int(cur_head.get("size_bytes") or 0)
-                + sum(new_sizes.values()),
+                + sum(st.sizes.values()),
                 "operation": "branch_append",
                 "committed_at_ms": _now_ms(),
             }
@@ -4480,36 +4549,19 @@ def append_branch(
             # appended the head is segment-shaped, drop the inline list
             for k in ("files", "file_sizes"):
                 new_head.pop(k, None)
-            if not new_head.get("segments"):
-                # nothing staged and no prior segments: keep inline
-                new_head["segments"] = segs
             branches = dict(fresh.get("branches") or {})
             branches[name] = {
                 **cur_br, "head": new_head, "seq": seen_seq + 1,
             }
-            out = {**fresh, "branches": branches}
-            fs.replace_with(
-                json.dumps(out),
+            st.swap(
+                fs.replace_with,
+                json.dumps({**fresh, "branches": branches}),
                 _manifest_path(table_dir, fs),
                 ".tmp.br.%s.%d" % (name.replace("/", "_"), seen_seq + 1),
             )
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
             return seen_seq + 1
-        finally:
-            lease.release()
-    except ConcurrentWriteError:
-        beat.stop()
-        try:
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-        except Exception:
-            pass
-        try:
-            fs.rmtree(fs.join(table_dir, seg))
-        except Exception:
-            pass
-        raise
-    finally:
-        beat.stop()
+
+        return st.under_lease(head_swap)
 
 
 def fast_forward_branch(
@@ -6472,7 +6524,7 @@ def _mor_commit(
     manifest: dict,
     addr_df: Optional[DataFrame],
     cand_files,
-    out_df: DataFrame,
+    out_df: Optional[DataFrame],
     parts,
     lease_ttl_ms: int,
     stats_cols,
@@ -6484,11 +6536,13 @@ def _mor_commit(
     operation: str = "merge",
 ) -> Optional[int]:
     """The MERGE-ON-READ write+commit phase shared by
-    ``merge_publish_incremental`` and ``merge_into``: write ``out_df``
-    as the delta's new files and fold ``addr_df`` (the matched rows'
-    ``(_fp, _ri)`` addresses, still a DataFrame — positions never touch
-    the driver) into executor-written delete-vector sidecars
-    (:func:`_dv_build`), both WITHOUT the lease; then under a short
+    ``merge_publish_incremental``, ``merge_into``, ``update_publish``
+    and the delete-vector delete (``out_df=None``: no data write):
+    write ``out_df`` as the delta's new files and fold ``addr_df`` (the
+    matched rows' ``(_fp, _ri)`` addresses, still a DataFrame —
+    positions never touch the driver) into executor-written
+    delete-vector sidecars (:func:`_dv_build`), both WITHOUT the
+    lease; then under a short
     commit lease swap the manifest — with the address-validity rebase
     that makes the lease-less scan safe (a concurrent commit that
     rewrote a matched file or changed its vectors raises instead of
@@ -6499,177 +6553,70 @@ def _mor_commit(
     committed entry adopts them, new files stamp the extended ids, and
     pre-widening files read the added columns as NULL (schema-merge
     read semantics, same as append's merge mode)."""
-    from pyspark.sql import Observation, functions as F
-
-    # ---- data-write phase (no lease): the post-state rows
-    seg = _claim_vdir(fs, table_dir, _next_version(fs, table_dir, manifest))
-    beat = _ClaimBeat(fs, table_dir, seg, lease_ttl_ms).start()
-    dv_fut = None
-    pool = None
-    try:
-        vdir = fs.join(table_dir, seg)
-        obs = Observation()
-        cnames, cmap, caggs = _constraint_aggs(manifest)
-        # ---- dv-write phase (no lease), CONCURRENT with the data
-        # write: the matched addresses (checkpointed upstream) and the
-        # post-state rows are independent pipelines that both must
-        # finish before the commit swap — submitting the sidecar build
-        # from a second driver thread lets its jobs back-fill executor
-        # slots left idle by the write's tail instead of running after
-        # it (optimization guide §2.6, overlap independent jobs). Both
-        # land in the same claimed staging dir (disjoint subpaths); on
-        # ANY failure the future is joined before cleanup so the
-        # reclaim never races an in-flight sidecar write.
-        dv0 = _load_dv(fs, table_dir, manifest)
-        if addr_df is not None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool = ThreadPoolExecutor(max_workers=1)
-            dv_fut = pool.submit(
-                _dv_build, spark, fs, table_dir, seg, addr_df,
-                cand_files, dv0,
-            )
-        writer = _pt_rebalance(
-            _materialize_partition_cols(
-                out_df, manifest.get("partition_spec")
-            ),
-            parts,
-        ).observe(
-            obs, F.count(F.lit(1)).alias("n"), *caggs
-        ).write
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(vdir)
-        _enforce_constraints(obs.get, cnames, cmap, who)
-        new_files, new_sizes = _scan_written(fs, vdir, seg)
-        n_new = int(obs.get["n"])
-        if n_new == 0:
-            # a zero-row post-state (all-delete or no-op merge) still
-            # leaves empty part files — never cite them; the staging
-            # dir becomes vacuum garbage
-            new_files, new_sizes = [], {}
-        new_refs: dict = {}
-        n_deleted = 0
-        if dv_fut is not None:
-            new_refs, n_deleted = dv_fut.result()
-            dv_fut = None
-        if not new_files and not new_refs:
-            # empty batch: nothing matched, nothing added — release the
-            # claim now rather than leaving it to vacuum's age reclaim
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-            return None
-        schema_json = out_schema_json or manifest["schema"]
-        fids = (
-            out_fids[0] if out_fids else _field_ids_of(manifest)[0]
-        )
-        if new_files:
-            seg_data = {"files": new_files, "file_sizes": new_sizes}
-            sc, bc = _index_defaults(
-                manifest, stats_cols, bloom_cols, schema_json
-            )
-            _enrich_seg(
-                spark, fs, table_dir, new_files, seg_data,
-                sc, bc, schema_json,
-            )
-            _stamp_fields(seg_data, fids)
-            _write_seg(fs, table_dir, seg, seg_data)
-        # ---- commit phase: short lease + address-validity rebase
-        prev = manifest
-        lease = _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
-            wait_ms=_COMMIT_WAIT_MS
-        )
-        try:
-            cur = _read_manifest(table_dir, fs)
-            if cur is None:
-                raise ConcurrentWriteError(
-                    "%s: manifest vanished" % who
-                )
-            if int(cur["version"]) != int(prev["version"]):
-                _check_rebase(prev, cur, who)
-                cur_live = set(_entry_files(fs, table_dir, cur))
-                if not set(new_refs) <= cur_live:
-                    raise ConcurrentWriteError(
-                        "%s: a concurrent commit "
-                        "rewrote file(s) holding matched keys — "
-                        "addresses are stale; re-run" % who
-                    )
-                cur_dv = _load_dv(fs, table_dir, cur)
-                if any(
-                    (dv0.get(f) or None) != (cur_dv.get(f) or None)
-                    for f in new_refs
-                ):
-                    raise ConcurrentWriteError(
-                        "%s: a concurrent delete "
-                        "changed a matched file's delete vectors — "
-                        "re-run" % who
-                    )
-                prev = cur
-            merged_dv = dict(_load_dv(fs, table_dir, prev))
-            merged_dv.update(new_refs)
-            segs, removed = _segments_of(fs, table_dir, prev)
-            if new_files:
-                segs = segs + [seg]
-            prev_nf, prev_sz = _entry_counters(fs, table_dir, prev)
-            entry = {
-                "segments": segs,
-                "removed": removed,
-                "n_rows": int(prev["n_rows"]) - n_deleted + n_new,
-                "n_files": prev_nf + len(new_files),
-                "size_bytes": prev_sz + sum(new_sizes.values()),
-                "schema": (
-                    out_schema_json if out_schema_json else prev["schema"]
+    dv0 = _load_dv(fs, table_dir, manifest)
+    fids = out_fids[0] if out_fids else _field_ids_of(manifest)[0]
+    with _Stage(fs, table_dir, manifest, who, lease_ttl_ms) as st:
+        build = (spark, fs, table_dir, st.seg, addr_df, cand_files, dv0)
+        if out_df is None:  # a delete: no data write to overlap
+            new_refs, n_deleted = _dv_build(*build)
+        else:
+            # ---- dv-write phase (no lease), CONCURRENT with the data
+            # write: the matched addresses (checkpointed upstream) and
+            # the post-state rows are independent pipelines that both
+            # must finish before the commit swap — submitting the
+            # sidecar build from a second driver thread lets its jobs
+            # back-fill executor slots left idle by the write's tail
+            # instead of running after it (optimization guide §2.6,
+            # overlap independent jobs). Both land in the staged dir:
+            # the sidecar under the hidden ``_dvp`` the data scan skips.
+            dv_fut = st.submit(_dv_build, *build) if addr_df is not None else None
+            st.write(
+                _pt_rebalance(
+                    _materialize_partition_cols(
+                        out_df, manifest.get("partition_spec")
+                    ),
+                    parts,
                 ),
-                "partition_by": parts,
-                "operation": operation,
-            }
-            if prev.get("partition_spec"):
-                entry["partition_spec"] = prev["partition_spec"]
+                parts,
+            )
+            if st.n_rows == 0:
+                # a zero-row post-state (all-delete or no-op merge)
+                # still leaves empty part files — never cite them
+                st.files, st.sizes = [], {}
+            new_refs, n_deleted = dv_fut.result() if dv_fut else ({}, 0)
+        if not st.files and not new_refs:
+            return None  # nothing matched, nothing added
+        st.index(
+            spark, out_schema_json or manifest["schema"], fids,
+            stats_cols, bloom_cols,
+        )
+
+        def entry_of(prev):
+            entry = _grow_entry(
+                fs, table_dir, prev, st, operation,
+                int(prev["n_rows"]) - n_deleted + st.n_rows,
+                out_schema_json,
+            )
             if out_fids:
                 entry["field_ids"] = out_fids[0]
                 entry["next_field_id"] = out_fids[1]
-            if merged_dv:
-                entry["dv"] = _write_dv(fs, table_dir, seg, merged_dv)
-                entry["dv_rows"] = _dv_nrows(merged_dv)
+            entry.update(
+                _dv_entry(
+                    fs, table_dir, st.seg,
+                    {**_load_dv(fs, table_dir, prev), **new_refs},
+                )
+            )
             if meta:
                 entry["meta"] = dict(meta)
-            version = int(prev["version"]) + 1
-            _commit(fs, table_dir, prev, version, entry, lease=lease)
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-            return version
-        finally:
-            lease.release()
-    except ConcurrentWriteError:
-        # callers with bounded retry (update_publish, merge re-runs)
-        # make lost races routine — reclaim the claimed _v<N> staging
-        # dir + claim marker now instead of leaving them to vacuum's
-        # TTL aging (best-effort; a crash still falls back to vacuum).
-        # Safe: every CWE raise above precedes the manifest swap, so
-        # nothing can reference this seg. Stop the heartbeat FIRST —
-        # a beat landing after the delete would recreate the claim —
-        # and join the in-flight sidecar build so the rmtree never
-        # races its writes.
-        beat.stop()
-        if dv_fut is not None:
-            try:
-                dv_fut.result()
-            except Exception:
-                pass
-        try:
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-        except Exception:
-            pass
-        try:
-            fs.rmtree(fs.join(table_dir, seg))
-        except Exception:
-            pass
-        raise
-    finally:
-        # joins any still-running sidecar build before unwinding (a
-        # write-phase failure must not leave a daemon thread writing
-        # into an abandoned staging dir)
-        if pool is not None:
-            pool.shutdown(wait=True)
-        beat.stop()
+            return entry
+
+        # ---- commit phase: short lease + address-validity rebase
+        return st.commit(
+            entry_of,
+            lambda cur: _files_unchanged(
+                fs, table_dir, manifest, cur, new_refs, who
+            ),
+        )
 
 
 def merge_into(
@@ -7597,8 +7544,6 @@ def _dv_delete(
     every dv'd file is still live, and no concurrent commit changed a
     touched file's vectors (that raises re-run — the sidecar union was
     built against the base state)."""
-    from pyspark.sql import functions as F
-
     parts = manifest.get("partition_by") or []
     res = _resolve_entry(fs, table_dir, manifest)
     dv0 = _load_dv(fs, table_dir, manifest)
@@ -7615,90 +7560,11 @@ def _dv_delete(
         .where(condition)
         .select("_fp", "_ri")
     )
-    # the claimed dir hosts the dv manifest + this commit's sidecars
-    seg = _claim_vdir(fs, table_dir, _next_version(fs, table_dir, manifest))
-    beat = _ClaimBeat(fs, table_dir, seg, lease_ttl_ms).start()
-    try:
-        new_refs, n_deleted = _dv_build(
-            spark, fs, table_dir, seg, addr, candidates, dv0
-        )
-        if not new_refs:
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-            return None
-        prev = manifest
-        lease = _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
-            wait_ms=_COMMIT_WAIT_MS
-        )
-        try:
-            cur = _read_manifest(table_dir, fs)
-            if cur is None:
-                raise ConcurrentWriteError(
-                    "delete_publish(dv): manifest vanished mid-delete"
-                )
-            if int(cur["version"]) != int(prev["version"]):
-                _check_rebase(prev, cur, "delete_publish(dv)")
-                cur_live = set(_entry_files(fs, table_dir, cur))
-                if not set(new_refs) <= cur_live:
-                    raise ConcurrentWriteError(
-                        "delete_publish(dv): a concurrent commit rewrote "
-                        "file(s) this delete addresses — positions are "
-                        "stale; re-run against the new snapshot"
-                    )
-                cur_dv = _load_dv(fs, table_dir, cur)
-                if any(
-                    (dv0.get(f) or None) != (cur_dv.get(f) or None)
-                    for f in new_refs
-                ):
-                    raise ConcurrentWriteError(
-                        "delete_publish(dv): a concurrent delete changed "
-                        "a touched file's delete vectors — re-run "
-                        "against the new snapshot"
-                    )
-                prev = cur
-            merged = dict(_load_dv(fs, table_dir, prev))
-            merged.update(new_refs)
-            segs, removed = _segments_of(fs, table_dir, prev)
-            prev_nf, prev_sz = _entry_counters(fs, table_dir, prev)
-            entry = {
-                "segments": segs,
-                "removed": removed,
-                "n_rows": int(prev["n_rows"]) - n_deleted,
-                "n_files": prev_nf,
-                "size_bytes": prev_sz,
-                "schema": prev["schema"],
-                "partition_by": parts,
-                "operation": "delete",
-                "dv": _write_dv(fs, table_dir, seg, merged),
-                "dv_rows": _dv_nrows(merged),
-            }
-            if prev.get("partition_spec"):
-                entry["partition_spec"] = prev["partition_spec"]
-            version = int(prev["version"]) + 1
-            _commit(fs, table_dir, prev, version, entry, lease=lease)
-            # commit done: the staging dir now exists and is referenced,
-            # so the claim marker's job (name uniqueness + in-flight
-            # liveness for vacuum) is over — release it so vacuum can
-            # tell committed dirs from in-flight staging writes
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-            return version
-        finally:
-            lease.release()
-    except ConcurrentWriteError:
-        # lost race: the bounded retry in delete_publish makes this
-        # ROUTINE, so don't leave the claimed _v<N> dir + staged _dvp
-        # sidecars to age out under vacuum's TTL — reclaim them now
-        # (best-effort; a crash here still falls back to vacuum)
-        try:
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-        except Exception:
-            pass
-        try:
-            fs.rmtree(fs.join(table_dir, seg))
-        except Exception:
-            pass
-        raise
-    finally:
-        beat.stop()
+    return _mor_commit(
+        spark, fs, table_dir, manifest, addr, candidates, None, parts,
+        lease_ttl_ms, None, None, None, who="delete_publish(dv)",
+        operation="delete",
+    )
 
 
 def compact_delete_vectors(
@@ -7749,14 +7615,13 @@ def compact_delete_vectors(
         # row-per-position v2 dataset still folds: the rewrite is the
         # upgrade path to the packed format)
         return None
-    seg = _claim_vdir(fs, table_dir, _next_version(fs, table_dir, manifest))
-    beat = _ClaimBeat(fs, table_dir, seg, lease_ttl_ms).start()
-    try:
+    who = "compact_delete_vectors"
+    with _Stage(fs, table_dir, manifest, who, lease_ttl_ms) as st:
         # fold in the CHUNK domain: v3 sidecars carry over as stored,
         # legacy refs pack in-plan; (file, chunk) is unique across the
         # union (each file's ref names one dataset) so no re-merge
         merged = _dv_chunks_df(spark, fs, table_dir, dv0)
-        dsrel = "%s/%s" % (seg, _DVP)
+        dsrel = "%s/%s" % (st.seg, _DVP)
         dsdir = _ref_path(fs, table_dir, dsrel)
         (
             merged.repartition(max(1, min(len(dv0), 64)), "_dv_file")
@@ -7769,7 +7634,7 @@ def compact_delete_vectors(
             raise RuntimeError(
                 "compact_delete_vectors: rewritten position counts "
                 "disagree with the manifest (%r vs %r) — aborting "
-                "before commit (staged dir is vacuum garbage)"
+                "before commit"
                 % (
                     {k: counts.get(k) for k in list(expected)[:3]},
                     {k: expected[k] for k in list(expected)[:3]},
@@ -7778,53 +7643,28 @@ def compact_delete_vectors(
         new_dv = {
             f: {"ds": dsrel, "n": expected[f], "fmt": "bm"} for f in dv0
         }
-        prev = manifest
-        lease = _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
-            wait_ms=_COMMIT_WAIT_MS
-        )
-        try:
-            cur = _read_manifest(table_dir, fs)
-            if cur is None:
-                raise ConcurrentWriteError(
-                    "compact_delete_vectors: manifest vanished"
-                )
-            if int(cur["version"]) != int(prev["version"]):
-                _check_rebase(prev, cur, "compact_delete_vectors")
-                cur_dv = _load_dv(fs, table_dir, cur)
-                cur_dv = {
-                    f: v for f, v in cur_dv.items() if _dv_val_n(v)
-                }
-                if cur_dv != dv0:
-                    raise ConcurrentWriteError(
-                        "compact_delete_vectors: a concurrent commit "
-                        "changed the delete vectors mid-fold — re-run"
-                    )
-                prev = cur
-            segs, removed = _segments_of(fs, table_dir, prev)
-            prev_nf, prev_sz = _entry_counters(fs, table_dir, prev)
-            entry = {
-                "segments": segs,
-                "removed": removed,
-                "n_rows": int(prev["n_rows"]),
-                "n_files": prev_nf,
-                "size_bytes": prev_sz,
-                "schema": prev["schema"],
-                "partition_by": prev.get("partition_by") or [],
-                "operation": "compact_dv",
-                "data_change": False,
-                "dv": _write_dv(fs, table_dir, seg, new_dv),
-                "dv_rows": _dv_nrows(new_dv),
+
+        def rebase(cur):
+            cur_dv = {
+                f: v
+                for f, v in _load_dv(fs, table_dir, cur).items()
+                if _dv_val_n(v)
             }
-            if prev.get("partition_spec"):
-                entry["partition_spec"] = prev["partition_spec"]
-            version = int(prev["version"]) + 1
-            _commit(fs, table_dir, prev, version, entry, lease=lease)
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-            return version
-        finally:
-            lease.release()
-    finally:
-        beat.stop()
+            if cur_dv != dv0:
+                raise ConcurrentWriteError(
+                    "compact_delete_vectors: a concurrent commit "
+                    "changed the delete vectors mid-fold — re-run"
+                )
+
+        def entry_of(prev):
+            entry = _grow_entry(
+                fs, table_dir, prev, st, "compact_dv", int(prev["n_rows"])
+            )
+            entry["data_change"] = False
+            entry.update(_dv_entry(fs, table_dir, st.seg, new_dv))
+            return entry
+
+        return st.commit(entry_of, rebase)
 
 
 def _footer_minmax(fs, path: str, cols) -> Optional[dict]:
@@ -8088,8 +7928,6 @@ def replace_files_publish(
     file being replaced is still live (nobody compacted or rewrote it
     meanwhile) — concurrent appends and disjoint rewrites merge
     cleanly, a conflicting rewrite raises."""
-    from pyspark.sql import Observation, functions as F
-
     fs = _fs_for(table_dir, df.sparkSession)
     prev = _base if _base is not None else _read_manifest(table_dir, fs)
     if prev is None:
@@ -8104,132 +7942,30 @@ def replace_files_publish(
             % sorted(missing)[:5]
         )
     # ---- data-write phase: no lease
-    seg = _claim_vdir(fs, table_dir, _next_version(fs, table_dir, prev))
-    beat = _ClaimBeat(fs, table_dir, seg, lease_ttl_ms).start()
-    try:
-        vdir = fs.join(table_dir, seg)
-        obs = Observation()
-        cnames, cmap, caggs = _constraint_aggs(prev)
+    who = "replace_files_publish"
+    with _Stage(fs, table_dir, prev, who, lease_ttl_ms) as st:
         # NO _pt_rebalance here: replace_files callers (compact,
         # compact_partitions, point deletes) hand in a frame whose
         # partitioning IS the deliberate output layout (target file
         # sizing); a rebalance by partition cols would collapse it
-        writer = _materialize_partition_cols(
-            df, prev.get("partition_spec")
-        ).observe(
-            obs, F.count(F.lit(1)).alias("n"), *caggs
-        ).write
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(vdir)
-        _enforce_constraints(
-            obs.get, cnames, cmap, "replace_files_publish"
+        st.write(
+            _materialize_partition_cols(df, prev.get("partition_spec")),
+            parts,
         )
-        new_files, new_sizes = _scan_written(fs, vdir, seg)
-        if new_files:
-            seg_data = {"files": new_files, "file_sizes": new_sizes}
-            sc, bc = _index_defaults(
-                prev, stats_cols, bloom_cols, prev["schema"]
-            )
-            _enrich_seg(
-                df.sparkSession, fs, table_dir, new_files, seg_data,
-                sc, bc, prev["schema"],
-            )
-            _stamp_fields(seg_data, _field_ids_of(prev)[0])
-            _write_seg(fs, table_dir, seg, seg_data)
+        st.index(
+            df.sparkSession, prev["schema"], _field_ids_of(prev)[0],
+            stats_cols, bloom_cols,
+        )
         # ---- commit phase: short lease + still-live rebase check
-        lease = _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
-            wait_ms=_COMMIT_WAIT_MS
+        return st.commit(
+            lambda prev: _replace_entry(
+                fs, table_dir, prev, st, replace_set.__contains__,
+                operation, data_change,
+            ),
+            lambda cur: _files_unchanged(
+                fs, table_dir, prev, cur, replace_set, who
+            ),
         )
-        try:
-            cur = _read_manifest(table_dir, fs)
-            if cur is None:
-                raise ConcurrentWriteError(
-                    "replace_files_publish: manifest vanished mid-write"
-                )
-            if int(cur["version"]) != int(prev["version"]):
-                _check_rebase(prev, cur, "replace_files_publish")
-                cur_live = set(_entry_files(fs, table_dir, cur))
-                if not replace_set <= cur_live:
-                    raise ConcurrentWriteError(
-                        "replace_files_publish: a concurrent commit rewrote "
-                        "file(s) this replace targets — re-run against the "
-                        "new snapshot"
-                    )
-                base_dv = _load_dv(fs, table_dir, prev)
-                cur_dv = _load_dv(fs, table_dir, cur)
-                if any(
-                    (base_dv.get(f) or []) != (cur_dv.get(f) or [])
-                    for f in replace_set
-                ):
-                    raise ConcurrentWriteError(
-                        "replace_files_publish: a concurrent delete changed "
-                        "a targeted file's delete vectors — re-run against "
-                        "the new snapshot"
-                    )
-                prev = cur
-            res = _resolve_entry(fs, table_dir, prev)
-            prev_dv = _load_dv(fs, table_dir, prev)
-            replaced = [f for f in res["files"] if f in replace_set]
-            replaced_rows = sum(
-                fs.file_rows(_ref_path(fs, table_dir, f)) - _dv_val_n(prev_dv.get(f))
-                for f in replaced
-            )
-            replaced_bytes = sum(
-                res["file_sizes"].get(f)
-                or fs.file_size(_ref_path(fs, table_dir, f))
-                for f in replaced
-            )
-            segs, removed = _segments_of(fs, table_dir, prev)
-            removed = sorted(set(removed) | replace_set)
-            if new_files:
-                segs = segs + [seg]
-            segs, removed = _prune_segments(fs, table_dir, segs, removed)
-            prev_nf, prev_sz = _entry_counters(fs, table_dir, prev)
-            carried = set(res["files"]) - replace_set
-            entry = {
-                "segments": segs,
-                "removed": removed,
-                "n_rows": int(prev["n_rows"]) - replaced_rows + int(obs.get["n"]),
-                "n_files": prev_nf - len(replaced) + len(new_files),
-                "size_bytes": prev_sz - replaced_bytes + sum(new_sizes.values()),
-                "schema": prev["schema"],
-                "partition_by": parts,
-                "operation": operation,
-                **_carry_dv(fs, table_dir, prev, seg, carried),
-            }
-            if prev.get("partition_spec"):
-                entry["partition_spec"] = prev["partition_spec"]
-            if not data_change:
-                entry["data_change"] = False
-            version = int(prev["version"]) + 1
-            _commit(fs, table_dir, prev, version, entry, lease=lease)
-            # commit done: the staging dir now exists and is referenced,
-            # so the claim marker's job (name uniqueness + in-flight
-            # liveness for vacuum) is over — release it so vacuum can
-            # tell committed dirs from in-flight staging writes
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-            return version
-        finally:
-            lease.release()
-    except ConcurrentWriteError:
-        # lost races are routine under the bounded re-run loops
-        # (update_publish CoW, replace_where_publish) — reclaim the
-        # staged dir + claim instead of aging them out under vacuum's
-        # TTL (best-effort; every CWE raise precedes the manifest swap).
-        # Stop the heartbeat FIRST so no beat recreates the claim.
-        beat.stop()
-        try:
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-        except Exception:
-            pass
-        try:
-            fs.rmtree(fs.join(table_dir, seg))
-        except Exception:
-            pass
-        raise
-    finally:
-        beat.stop()
 
 
 def publish_clustered(
