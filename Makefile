@@ -8,5 +8,7 @@ SF ?= sf0.01
 close-round:
 	python tools/close_round.py $(ROUND) --sf $(SF)
 
+# The ROADMAP tier-1 command, verbatim: a local run is the gate run.
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider

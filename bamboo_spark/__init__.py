@@ -14,7 +14,8 @@ Pandas UDFs on genuinely non-relational paths.
 
 Public API parity map (reference → here):
   bamboo.from_json / from_avro / from_pbd / from_arrow / from_object
-    → same names here (avro/pbd are gated; see sources/).
+    → same names here (avro/pbd use pure-Python decoders, no connector;
+      see sources/).
   Node.flatten(flatten_strategy, name_strategy, join, include, exclude)
     → Dataset.flatten(...) with identical semantics plus a working
       JoinType.OUTER (the reference declares it but raises

@@ -8,16 +8,17 @@ Codecs: null, deflate (raw DEFLATE). Values: zigzag-varint ints/longs,
 little-endian IEEE floats, length-prefixed bytes/strings, index-coded
 enums/unions, count-block arrays/maps, records as field concatenation.
 
-This is the *fallback* path used when the spark-avro connector jar is not
-on the classpath (see avro.py). Execution model: the driver scans only
-block headers (count/size varints — payloads skipped), then the value
-decode runs on executors inside ``mapInArrow`` over block ranges; Avro
-blocks are the natural split unit (spec: each block is independently
-decodable after the header). Clusion pushdown happens at decode time:
-excluded fields are *walked but never materialized* (``_skip_value`` —
-Avro's data-dependent sizes force the walk, but skipped strings/bytes/
-subtrees allocate nothing), mirroring the reference's reader-schema
-pruning (avro_direct.cpp:107-166).
+This is the only Avro decoder (no spark-avro connector is used; see
+avro.py). One header scanner (``scan_header_stream``) and one block
+boundary scanner (``scan_blocks_stream``) read every source through a
+bounded ``ChunkedReader``: the driver hops block headers with payloads
+seek-skipped, and the decode kernel re-walks its block range reading
+payloads; Avro blocks are the natural split unit (spec: each block is
+independently decodable after the header). Clusion pushdown happens at
+decode time: excluded fields are *walked but never materialized*
+(``_skip_value`` — Avro's data-dependent sizes force the walk, but
+skipped strings/bytes/subtrees allocate nothing), mirroring the
+reference's reader-schema pruning (avro_direct.cpp:107-166).
 
 Reference behaviors matched (decoder-level): enum → symbol string,
 fixed/bytes → bytes, nullable union → None/value
@@ -31,9 +32,11 @@ import io
 import json
 import struct
 import zlib
-from typing import Any, Dict, List, Tuple
+from typing import Any, Dict, Iterator, List, Optional, Tuple
 
 from pyspark.sql import types as T
+
+from bamboo_spark.sources._stream import ChunkedReader
 
 MAGIC = b"Obj\x01"
 
@@ -55,9 +58,6 @@ class _Reader:
             raise AvroDecodeError("Unexpected end of Avro data")
         self.pos += n
         return out
-
-    def at_end(self) -> bool:
-        return self.pos >= len(self.buf)
 
     def read_long(self) -> int:
         buf = self.buf
@@ -214,8 +214,8 @@ def _decode_value(
         logical = schema.get("logicalType")
         if logical is not None:
             # logical types decode to Arrow-ready representations with
-            # the SAME semantics spark-avro applies (so the fallback and
-            # connector paths agree): date → epoch days, timestamps →
+            # the SAME semantics spark-avro applies (so values match
+            # Spark's own Avro reader): date → epoch days, timestamps →
             # epoch µs, decimal → two's-complement unscaled → Decimal
             if logical == "date" and stype == "int":
                 return r.read_long()
@@ -693,54 +693,17 @@ def merge_avro_schemas(a: Any, b: Any, path: str = "root") -> Any:
 
 
 def scan_header(data: bytes) -> Tuple[Any, str, bytes, int]:
-    """Parse container magic + metadata map → (schema JSON, codec, sync
-    marker, first-block offset). Block payloads are not touched."""
-    r = _Reader(data)
-    if r.read(4) != MAGIC:
-        raise AvroDecodeError("Not an Avro container file (bad magic)")
-    meta: Dict[str, bytes] = {}
-    while True:
-        count = r.read_long()
-        if count == 0:
-            break
-        if count < 0:
-            r.read_long()
-            count = -count
-        for _ in range(count):
-            key = r.read_utf8()
-            meta[key] = r.read_bytes()
-    schema = json.loads(meta["avro.schema"])
-    codec = meta.get("avro.codec", b"null").decode()
-    if codec not in ("null", "deflate", "snappy"):
-        raise AvroDecodeError("Unsupported Avro codec: %s" % codec)
-    sync = r.read(16)
-    return schema, codec, sync, r.pos
-
-
-def scan_blocks(data: bytes, pos: int, sync: bytes) -> List[Tuple[int, int, int]]:
-    """Walk block headers collecting (payload offset, payload size,
-    record count) — the metadata pass. Payload bytes are skipped, not
-    read; each block is then independently decodable on an executor."""
-    r = _Reader(data)
-    r.pos = pos
-    blocks: List[Tuple[int, int, int]] = []
-    while not r.at_end():
-        n = r.read_long()
-        size = r.read_long()
-        blocks.append((r.pos, size, n))
-        r.skip(size)
-        if r.read(16) != sync:
-            raise AvroDecodeError("Sync marker mismatch")
-    return blocks
+    """``scan_header_stream`` over an in-memory container."""
+    return scan_header_stream(ChunkedReader(io.BytesIO(data), error_cls=AvroDecodeError))
 
 
 def scan_header_stream(reader) -> Tuple[Any, str, bytes, int]:
-    """Streaming twin of ``scan_header`` over a ChunkedReader: reads
-    magic + metadata map + sync marker in bounded chunks. Returns
-    (schema JSON, codec, sync, first-block offset)."""
+    """Parse container magic + metadata map + sync marker from a
+    ChunkedReader in bounded chunks. Returns (schema JSON, codec, sync,
+    first-block offset). Block payloads are not touched."""
     if reader.read(4) != MAGIC:
         raise AvroDecodeError("Not an Avro container file (bad magic)")
-    meta: Dict[str, bytes] = {}
+    meta: Dict[bytes, bytes] = {}
     while True:
         count = reader.read_zigzag()
         if count == 0:
@@ -750,33 +713,45 @@ def scan_header_stream(reader) -> Tuple[Any, str, bytes, int]:
             count = -count
         for _ in range(count):
             klen = reader.read_zigzag()
-            key = reader.read(klen).decode("utf-8")
+            key = reader.read(klen)
             vlen = reader.read_zigzag()
             meta[key] = reader.read(vlen)
-    schema = json.loads(meta["avro.schema"])
-    codec = meta.get("avro.codec", b"null").decode()
+    try:
+        schema = json.loads(meta[b"avro.schema"])
+        codec = meta.get(b"avro.codec", b"null").decode()
+    except (KeyError, ValueError) as e:
+        raise AvroDecodeError("Bad Avro container metadata: %s" % e) from e
     if codec not in ("null", "deflate", "snappy"):
         raise AvroDecodeError("Unsupported Avro codec: %s" % codec)
     sync = reader.read(16)
     return schema, codec, sync, reader.tell()
 
 
-def scan_blocks_stream(reader, sync: bytes) -> List[Tuple[int, int, int]]:
-    """Streaming twin of ``scan_blocks``: hop block headers, seeking past
-    payloads (only the count/size varints and the 16-byte sync marker
-    are ever read). Driver memory is O(n_blocks) header tuples plus one
-    read buffer — never O(file)."""
-    blocks: List[Tuple[int, int, int]] = []
-    while not reader.eof():
+def scan_blocks_stream(
+    reader, sync: bytes, end: Optional[int] = None, payloads: bool = False
+) -> Iterator[Tuple[int, int, int, Optional[bytes]]]:
+    """The block boundary scan: from the reader's position up to
+    ``end`` (default EOF), yield ``(block start, block end, record
+    count, payload)`` per block, where [start, end) spans the count and
+    size varints, the payload and the sync marker. Without ``payloads``
+    the payload is None and is seeked past (only the varints and the
+    16-byte sync are read), so a driver-side scan holds one read buffer,
+    never O(file); with it, the payload bytes are read for decoding."""
+    stop = reader.size if end is None else end
+    while reader.tell() < stop:
+        start = reader.tell()
         n = reader.read_zigzag()
         size = reader.read_zigzag()
-        if size < 0:
-            raise AvroDecodeError("Negative Avro block size")
-        blocks.append((reader.tell(), size, n))
-        reader.skip(size)
+        if size < 0 or n < 0:
+            raise AvroDecodeError("Negative Avro block size or count")
+        if payloads:
+            payload = reader.read(size)
+        else:
+            payload = None
+            reader.skip(size)
         if reader.read(16) != sync:
             raise AvroDecodeError("Sync marker mismatch")
-    return blocks
+        yield start, reader.tell(), n, payload
 
 
 def decompress_block(payload: bytes, codec: str) -> bytes:
@@ -817,13 +792,12 @@ def decode_block(
 
 
 def decode_container(data: bytes, fltr: Any = None, implicit_root: bool = True) -> Tuple[List[Any], Any]:
-    """Decode a whole container file → (records, parsed schema JSON)."""
-    schema, codec, sync, pos = scan_header(data)
+    """Decode a whole in-memory container → (records, parsed schema JSON)."""
+    reader = ChunkedReader(io.BytesIO(data), error_cls=AvroDecodeError)
+    schema, codec, sync, _ = scan_header_stream(reader)
     records: List[Any] = []
-    for off, size, n in scan_blocks(data, pos, sync):
-        records.extend(
-            decode_block(data[off : off + size], n, codec, schema, fltr, implicit_root)
-        )
+    for _, _, n, payload in scan_blocks_stream(reader, sync, payloads=True):
+        records.extend(decode_block(payload, n, codec, schema, fltr, implicit_root))
     return records, schema
 
 

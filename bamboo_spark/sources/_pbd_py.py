@@ -19,9 +19,12 @@ fields (reference behavior: pbd.cpp:233-278; pbd_tests.py:62-67 expects
 sd='' and de='DE1' for absent fields). Groups raise, matching
 pbd.hpp:195-199.
 
-Execution model: the driver parses only the descriptor header and scans
-record *boundaries* (varint length prefixes — no field decode); the wire
-decode itself runs on executors inside ``mapInPandas`` (see pbd.py).
+Execution model: one header parser (``parse_header_stream``) and one
+record boundary scanner (``scan_record_splits``) read every source
+through a bounded ``ChunkedReader``. The driver walks the varint length
+prefixes with payloads seek-skipped (no field decode); the wire decode
+runs on executors inside ``mapInArrow`` (see pbd.py), re-walking its
+byte range with payloads read.
 Clusion pushdown happens at decode time: the descriptor tree is pruned
 *before* the wire walk, so excluded fields take the unknown-field fast
 path — their bytes are skipped positionally, never sliced, never parsed
@@ -30,11 +33,14 @@ path — their bytes are skipped positionally, never sliced, never parsed
 
 from __future__ import annotations
 
+import io
 import struct
 from dataclasses import dataclass, field as dc_field
-from typing import Any, Dict, List, Optional, Tuple
+from typing import Any, Dict, Iterator, List, Optional, Tuple
 
 from pyspark.sql import types as T
+
+from bamboo_spark.sources._stream import ChunkedReader
 
 MAGIC = b"\x00\x00\x10\xbd"
 
@@ -545,32 +551,15 @@ def prune_message_desc(desc: MessageDesc, fltr: Any, parent_included: bool) -> M
 
 
 def parse_header(data: bytes) -> Tuple[MessageDesc, int]:
-    """Parse magic + descriptors + root name; return (root, body offset).
-    Cheap: descriptor bytes only — record payloads are not touched."""
-    if data[:4] != MAGIC:
-        raise PbdDecodeError("Not a PBD file (bad magic)")
-    pos = 5  # magic + version byte
-    n_files, pos = _read_varint(data, pos)
-    pool: dict = {}
-    for _ in range(n_files):
-        size, pos = _read_varint(data, pos)
-        _parse_file_desc(data[pos : pos + size], pool)
-        pos += size
-    _link(pool)
-    size, pos = _read_varint(data, pos)
-    root_name = data[pos : pos + size].decode()
-    pos += size
-    root = pool.get(root_name)
-    if not isinstance(root, MessageDesc):
-        raise PbdDecodeError("Root message %s not found in descriptors" % root_name)
-    return root, pos
+    """``parse_header_stream`` over an in-memory container."""
+    return parse_header_stream(ChunkedReader(io.BytesIO(data), error_cls=PbdDecodeError))
 
 
 def parse_header_stream(reader) -> Tuple[MessageDesc, int]:
-    """Streaming twin of ``parse_header`` over a ChunkedReader: reads
-    magic + descriptors + root name in bounded chunks — the descriptor
-    bytes themselves are materialized (they are KB-scale), record
-    payloads never are. Returns (root desc, body offset)."""
+    """Parse magic + descriptors + root name from a ChunkedReader in
+    bounded chunks — the descriptor bytes themselves are materialized
+    (they are KB-scale), record payloads never are. Returns (root desc,
+    body offset)."""
     if reader.read(4) != MAGIC:
         raise PbdDecodeError("Not a PBD file (bad magic)")
     reader.read(1)  # version byte
@@ -588,27 +577,35 @@ def parse_header_stream(reader) -> Tuple[MessageDesc, int]:
     return root, reader.tell()
 
 
-def scan_record_splits(reader, records_per_split: int) -> List[Tuple[int, int, int]]:
-    """Bounded-memory boundary scan: walk the varint length prefixes
-    (payloads skipped via seek, never read) and emit (start, end,
-    n_records) splits of ~records_per_split records each. Driver memory
-    is O(n_records / records_per_split) split tuples plus one read
-    buffer — never O(file). Each [start, end) span is independently
-    decodable on an executor (see decode_range)."""
-    splits: List[Tuple[int, int, int]] = []
+def scan_record_splits(
+    reader, records_per_split: int, end: Optional[int] = None, payloads: bool = False
+) -> Iterator[Tuple[int, int, int, Optional[List[bytes]]]]:
+    """The record boundary scan: from the reader's position up to
+    ``end`` (default EOF), walk the varint length prefixes and yield
+    ``(start, end, n_records, messages)`` splits of ``records_per_split``
+    records (the last may be short). Each [start, end) span is
+    independently decodable. Without ``payloads`` the messages are None
+    and are seeked past, never read, so a driver-side scan holds one
+    read buffer and never O(file); with it, ``messages`` lists the
+    split's record payloads for decoding."""
+    stop = reader.size if end is None else end
     start = reader.tell()
+    messages: Optional[List[bytes]] = [] if payloads else None
     count = 0
-    while not reader.eof():
+    while reader.tell() < stop:
         size = reader.read_varint()
-        reader.skip(size)  # raises PbdDecodeError on truncation
+        if payloads:
+            messages.append(reader.read(size))
+        else:
+            reader.skip(size)  # raises PbdDecodeError on truncation
         count += 1
         if count >= records_per_split:
-            splits.append((start, reader.tell(), count))
+            yield start, reader.tell(), count, messages
             start = reader.tell()
+            messages = [] if payloads else None
             count = 0
     if count:
-        splits.append((start, reader.tell(), count))
-    return splits
+        yield start, reader.tell(), count, messages
 
 
 def check_wire_compat(
@@ -661,57 +658,6 @@ def check_wire_compat(
             check_wire_compat(rf.message, wf.message, here)
 
 
-def scan_record_boundaries(data: bytes, pos: int) -> List[int]:
-    """Walk the length-prefixed record stream collecting byte boundaries
-    (including the final end offset). Metadata pass only — reads the
-    varint prefixes and jumps; no record bytes are sliced or decoded.
-    This is what lets the decode itself run on executors over byte
-    ranges: [b[i], b[i+1]) spans are independently decodable."""
-    bounds = [pos]
-    n = len(data)
-    append = bounds.append
-    while pos < n:
-        size = 0
-        shift = 0
-        while True:
-            b = data[pos]
-            pos += 1
-            size |= (b & 0x7F) << shift
-            if not (b & 0x80):
-                break
-            shift += 7
-            if shift > 70:
-                raise PbdDecodeError("Malformed varint")
-        pos += size
-        if pos > n:
-            raise PbdDecodeError("Truncated PBD record")
-        append(pos)
-    return bounds
-
-
-def decode_range(data: bytes, start: int, end: int, desc: MessageDesc) -> List[Dict[str, Any]]:
-    """Decode every length-prefixed record in data[start:end) — the
-    executor-side kernel (each mapInPandas task gets one byte range)."""
-    out = []
-    pos = start
-    append = out.append
-    while pos < end:
-        size, pos = _read_varint(data, pos)
-        append(decode_message(data[pos : pos + size], desc))
-        pos += size
-    return out
-
-
-def parse_container(data: bytes) -> Tuple[MessageDesc, List[bytes]]:
-    root, pos = parse_header(data)
-    messages = []
-    while pos < len(data):
-        size, pos = _read_varint(data, pos)
-        messages.append(data[pos : pos + size])
-        pos += size
-    return root, messages
-
-
 # ---------------------------------------------------------- spark schema
 
 _SPARK_TYPES = {
@@ -746,13 +692,6 @@ def pbd_to_spark(desc: MessageDesc) -> T.StructType:
             inner = T.ArrayType(inner, True)
         fields.append(T.StructField(f.name, inner, True))
     return T.StructType(fields)
-
-
-def decode_pbd(data: bytes) -> Tuple[List[Dict[str, Any]], T.StructType]:
-    root, payloads = parse_container(data)
-    schema = pbd_to_spark(root)
-    records = [decode_message(p, root) for p in payloads]
-    return records, schema
 
 
 # --------------------------------------------------------------- writer

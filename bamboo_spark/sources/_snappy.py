@@ -9,12 +9,11 @@ sequence of elements tagged by the low 2 bits of the first byte —
 11 copy with 4-byte offset. Copies may overlap their output (offset <
 length repeats the pattern), which is how snappy encodes runs.
 
-This backs the Avro fallback decoder's "snappy" codec (Avro frames each
-block as raw snappy + 4-byte big-endian CRC32 of the uncompressed data —
+This backs the Avro decoder's "snappy" codec (Avro frames each block
+as raw snappy + 4-byte big-endian CRC32 of the uncompressed data —
 checked by the caller, see _avro_py.decompress_block). The real snappy
 C library is not in this container; at ~container-block sizes (64 KiB)
-this pure-Python walk is adequate for the fallback path, and the
-connector jar path never reaches it.
+this pure-Python walk is adequate.
 """
 
 from __future__ import annotations

@@ -1,21 +1,45 @@
-"""Bounded-memory forward reader over a binary stream.
+"""Bounded-memory range reads shared by the Avro and PBD sources.
 
-The driver-side metadata passes of ``from_pbd`` / ``from_avro`` (varint
-record-boundary walk, Avro block-header hops) must never materialize a
-whole container file: one 1 TB file would OOM the driver even though
-the decode itself is executor-side. ``ChunkedReader`` holds at most one
-``bufsize`` chunk at a time and skips payload bytes with ``seek`` —
-the same bounded-buffer discipline as the reference's 64 KiB buffered
-input stream (reference cpp/src/bind.cpp:131-168), sized larger here
-because a metadata pass over a remote FS wants fewer, bigger reads.
+Both binary container formats decode the same way, whatever the source
+(reference: one buffered stream reader for every input,
+cpp/src/bind.cpp:131-168):
+
+1. The driver resolves the source (``resolve_source``): a path stays a
+   path, a small bytes/stream source is broadcast, a large one spills
+   to ``$BAMBOO_SPARK_SPILL_DIR``. It then scans the container's header
+   and boundaries through ``ChunkedReader`` and cuts ``(source, start,
+   end)`` range rows (``plan_ranges``); a multi-file read makes one
+   row per file.
+2. Each format's one decode kernel runs inside ``mapInArrow``
+   (``map_ranges``): it opens the source (``open_source``), re-reads
+   the header, and yields one Arrow batch per block or record range
+   (``records_to_batch``).
+
+``ChunkedReader`` holds at most one ``bufsize`` chunk at a time and
+skips payload bytes with ``seek``: neither the driver scan nor a decode
+task ever materializes a whole container file.
 """
 
 from __future__ import annotations
 
 import io
-from typing import Type
+import os
+from typing import Any, Callable, Iterator, List, Optional, Tuple, Type, Union
+
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 DEFAULT_BUFSIZE = 1 << 20  # 1 MiB
+
+# Records per decode task (upper bound) and per emitted Arrow batch:
+# keeps tiny files on one task and spreads big files across the
+# parallelism without over-splitting.
+TARGET_RECORDS_PER_SPLIT = 2048
+
+# bytes/stream sources at or under this are broadcast (works on any
+# cluster); larger ones are spilled to $BAMBOO_SPARK_SPILL_DIR (must be
+# cluster-visible on a real deployment) so the driver never holds a
+# whole huge container in memory.
+BROADCAST_MAX = 64 << 20
 
 
 class ChunkedReader:
@@ -63,9 +87,6 @@ class ChunkedReader:
     def tell(self) -> int:
         return self.abs
 
-    def eof(self) -> bool:
-        return self.abs >= self.size
-
     def _fill(self) -> None:
         # invariant: fh's position == self.abs whenever the buffer is empty
         n = self.fill_hint or self.bufsize
@@ -102,6 +123,8 @@ class ChunkedReader:
         return (v >> 1) ^ -(v & 1)
 
     def read(self, n: int) -> bytes:
+        if not 0 <= n <= self.size - self.abs:
+            raise self.error_cls("Unexpected end of stream")
         avail = len(self.buf) - self.off
         if n <= avail:
             out = self.buf[self.off : self.off + n]
@@ -222,3 +245,129 @@ def drain_or_spill(
         total += len(c)
     spill_dir = require_spill_dir(spill_dir, master)
     return None, spill_to_temp(source, spill_dir, prefix_chunks=tuple(chunks))
+
+
+# ------------------------------------------------------- range decoding
+
+
+def resolve_source(
+    source: Union[bytes, io.IOBase, str, Any], spark: SparkSession
+) -> Tuple[Optional[str], Optional[bytes]]:
+    """``(path, data)`` for one container source, exactly one set: a
+    path stays a path; bytes or a stream at or under ``BROADCAST_MAX``
+    come back as ``data`` (to broadcast); larger ones spill to a temp
+    file under ``$BAMBOO_SPARK_SPILL_DIR`` and come back as a path."""
+    if isinstance(source, str):
+        return os.path.abspath(source), None
+    if not hasattr(source, "read"):
+        source = bytes(source)
+        if len(source) <= BROADCAST_MAX:
+            return None, source
+        source = io.BytesIO(source)
+    spill_dir = os.environ.get("BAMBOO_SPARK_SPILL_DIR", "")
+    data, path = drain_or_spill(
+        source, BROADCAST_MAX, spill_dir, spark.sparkContext.master or "local"
+    )
+    return path, data
+
+
+def open_source(path: Optional[str], data: Any) -> io.IOBase:
+    """Open a range row's source: the file at ``path``, else the
+    in-memory container ``data`` (on executors, the broadcast value)."""
+    return open(path, "rb") if path is not None else io.BytesIO(data)
+
+
+def expand_paths(paths: Union[str, list], who: str) -> List[str]:
+    """A glob (sorted matches, or the literal path) or a list → absolute
+    file paths for a multi-file read."""
+    import glob
+
+    if isinstance(paths, str):
+        files = sorted(os.path.abspath(p) for p in glob.glob(paths)) or [
+            os.path.abspath(paths)
+        ]
+    else:
+        files = [os.path.abspath(p) for p in paths]
+    if not files:
+        raise ValueError("%s: no input files" % who)
+    return files
+
+
+def plan_ranges(
+    splits: List[Tuple[int, int, int]], parallelism: int
+) -> List[Tuple[int, int]]:
+    """Coalesce a scan's adjacent ``(start, end, n_records)`` splits
+    into contiguous byte ranges, one per decode task: at most
+    ``parallelism`` of them, and no more than one per
+    ``TARGET_RECORDS_PER_SPLIT`` records. Grouping is index-even."""
+    total = sum(s[2] for s in splits)
+    n_groups = min(
+        max(parallelism, 1),
+        -(-total // TARGET_RECORDS_PER_SPLIT),
+        len(splits),
+    )
+    out = []
+    for i in range(n_groups):
+        lo = i * len(splits) // n_groups
+        hi = (i + 1) * len(splits) // n_groups
+        out.append((splits[lo][0], splits[hi - 1][1]))
+    return out
+
+
+_RANGE_SCHEMA = T.StructType(
+    [
+        T.StructField("source", T.StringType()),
+        T.StructField("start", T.LongType()),
+        T.StructField("end", T.LongType()),
+    ]
+)
+
+
+def map_ranges(
+    spark: SparkSession,
+    rows: List[Tuple[Optional[str], int, Optional[int]]],
+    kernel: Callable[[Iterator[Any]], Iterator[Any]],
+    schema: T.StructType,
+) -> DataFrame:
+    """Run a decode kernel over ``(source, start, end)`` range rows, one
+    task per row. ``source`` None means the broadcast buffer; ``end``
+    None means end of file."""
+    if not rows:
+        return spark.createDataFrame([], schema)
+    df = spark.createDataFrame(rows, _RANGE_SCHEMA)
+    if len(rows) > spark.sparkContext.defaultParallelism:
+        # up to defaultParallelism rows, the local scan already puts
+        # one row in each slice; a round-robin shuffle would not
+        df = df.repartition(len(rows))
+    return df.mapInArrow(kernel, schema)
+
+
+def range_rows(batches: Iterator[Any]) -> Iterator[Tuple[Optional[str], int, Optional[int]]]:
+    """Kernel side of ``map_ranges``: the range rows of a task."""
+    for batch in batches:
+        yield from zip(*(c.to_pylist() for c in batch.columns))
+
+
+def records_to_batch(
+    records: List[Any],
+    arrow_schema: Any,
+    record_root: bool,
+    error_cls: Type[Exception],
+) -> Any:
+    """Decoded rows → one Arrow batch: dict rows column by column under
+    a record root, bare values under a primitive root. A decoded value
+    that does not fit its declared type is a decode error of the
+    format, not an Arrow one."""
+    import pyarrow as pa
+
+    try:
+        if record_root:
+            arrays = [
+                pa.array([r[f.name] for r in records], type=f.type)
+                for f in arrow_schema
+            ]
+        else:
+            arrays = [pa.array(records, type=arrow_schema.field(0).type)]
+    except (pa.ArrowException, OverflowError) as e:
+        raise error_cls("Decoded value does not fit its column: %s" % e) from e
+    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)

@@ -1,125 +1,148 @@
-"""``from_avro`` — Avro container files → Dataset.
+"""``from_avro`` / ``read_avro_py`` — Avro container files → Dataset.
 
-Two paths:
+A pure-Python Avro container decoder (null/deflate/snappy codecs; see
+``_avro_py``) with one range-decode path for every kind of input
+(``_stream`` describes the plumbing):
 
-* **Connector path** (preferred at scale): ``spark.read.format("avro")``
-  when the spark-avro module is on the classpath — distributed decode,
-  nullable unions → nullable fields, enum → string, pushdown via the
-  read-time clusion projection.
-* **Pure-Python fallback** (this module's ``from_avro``): a minimal Avro
-  container decoder (null/deflate codecs) with the same execution shape
-  as the connector — the driver scans only block *headers*, and the
-  value decode runs on executors inside ``mapInArrow`` over block
-  ranges (Avro blocks are the spec's independent decode unit).
+* ``from_avro`` takes one source (bytes, a stream or a path). The
+  driver reads the header and hops block headers with payloads
+  seek-skipped, then cuts the block sequence into contiguous ranges,
+  one per decode task.
+* ``read_avro_py`` takes many files: one range per file, so no file
+  bytes pass through the driver beyond the headers it reads to fix the
+  reader schema.
+
+Both run the one decode kernel ``_decode_ranges`` inside ``mapInArrow``:
+it re-reads each file's header, resolves that writer schema against
+the reader schema, and emits one Arrow batch per block, so a task holds
+one block at a time and never a whole file.
 
 Read-time ``include``/``exclude`` follow the reference's pushdown
 semantics (avro_direct.cpp:107-166): pruned at decode time — excluded
 fields are walked but never materialized (``_avro_py._skip_value``) and
 the output schema is pruned with the exact rule the Catalyst nested
-projection uses (projection.prune_schema), so both paths select the
-same columns.
+projection uses (projection.prune_schema), so the decoded rows and the
+declared schema select the same columns.
 """
 
 from __future__ import annotations
 
+import functools
 import io
-import os
-from typing import Any, Callable, Iterator, List, Optional, Tuple, Union
+import json
+from typing import Any, Iterator, Optional, Union
 
 from pyspark.sql import SparkSession, types as T
 
 from bamboo_spark.clusions import ColumnFilter
 from bamboo_spark.dataset import Dataset
-from bamboo_spark.projection import apply_column_filter, prune_schema
+from bamboo_spark.projection import prune_schema
 from bamboo_spark.sources._avro_py import (
     AvroDecodeError,
     avro_to_spark,
     decode_block,
-    scan_blocks,
+    decode_block_resolved,
+    merge_avro_schemas,
     scan_blocks_stream,
-    scan_header,
     scan_header_stream,
 )
-from bamboo_spark.sources._stream import ChunkedReader, drain_or_spill
+from bamboo_spark.sources._stream import (
+    ChunkedReader,
+    expand_paths,
+    map_ranges,
+    open_source,
+    plan_ranges,
+    range_rows,
+    records_to_batch,
+    resolve_source,
+)
 from bamboo_spark.sources.obj import DEFAULT_COLUMN
 
-# Records per decode task, upper bound (see pbd.py for rationale).
-_TARGET_RECORDS_PER_SPLIT = 2048
 
-# bytes/stream sources at or under this are broadcast; larger ones are
-# spilled to $BAMBOO_SPARK_SPILL_DIR (see pbd.py for the rationale and
-# the cluster-visibility caveat).
-_BROADCAST_MAX = 64 << 20
-
-
-def read_avro(
-    path: str,
-    include: Any = None,
-    exclude: Any = None,
-    spark: Optional[SparkSession] = None,
-) -> Dataset:
-    """Distributed Avro file read (requires the spark-avro module)."""
-    if spark is None:
-        from bamboo_spark.session import get_spark
-
-        spark = get_spark()
-    df = spark.read.format("avro").load(path)
-    return Dataset(apply_column_filter(df, include, exclude))
-
-
-def _make_decoder(
-    avro_schema: Any,
-    codec: str,
+def _decode_ranges(
+    batches: Iterator[Any],
+    reader_schema: Any,
     out_schema: T.StructType,
     record_root: bool,
     fltr: Optional[ColumnFilter],
     implicit_root: bool,
-    path: Optional[str],
-    bc: Any,
-    writer_schema: Any = None,
-) -> Callable[[Iterator[Any]], Iterator[Any]]:
+    bc: Any = None,
+) -> Iterator[Any]:
+    """The Avro decode kernel (``mapInArrow``) over ``(source, start,
+    end)`` range rows: open the source (a path, or the broadcast buffer
+    ``bc``), parse its header, decode the blocks in [start, end) under
+    ``reader_schema`` — plain when the file's writer schema equals it,
+    resolved otherwise — and yield one Arrow batch per block."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(out_schema)
-    names = [f.name for f in out_schema.fields]
-
-    def fn(batches: Iterator[Any]) -> Iterator[Any]:
-        import pyarrow as pa
-
-        from bamboo_spark.sources._avro_py import decode_block_resolved
-
-        for batch in batches:
-            offs = batch.column(0).to_pylist()
-            sizes = batch.column(1).to_pylist()
-            counts = batch.column(2).to_pylist()
-            for off, size, n in zip(offs, sizes, counts):
-                if path is not None:
-                    with open(path, "rb") as fh:
-                        fh.seek(off)
-                        payload = fh.read(size)
+    reader_key = json.dumps(reader_schema, sort_keys=True)
+    for source, start, end in range_rows(batches):
+        with open_source(source, None if bc is None else bc.value) as fh:
+            reader = ChunkedReader(fh, error_cls=AvroDecodeError)
+            writer_schema, codec, sync, body = scan_header_stream(reader)
+            same = json.dumps(writer_schema, sort_keys=True) == reader_key
+            reader.skip(max(start - body, 0))
+            for _, _, n, payload in scan_blocks_stream(
+                reader, sync, end, payloads=True
+            ):
+                if not n:
+                    continue
+                if same:
+                    records = decode_block(
+                        payload, n, codec, writer_schema, fltr, implicit_root
+                    )
                 else:
-                    payload = bc.value[off : off + size]
-                if writer_schema is not None:
+                    # evolved file: promotions, default fill, writer-only
+                    # wire-skip
                     records = decode_block_resolved(
-                        payload, n, codec, writer_schema, avro_schema,
+                        payload, n, codec, writer_schema, reader_schema,
                         fltr, implicit_root,
                     )
-                else:
-                    records = decode_block(
-                        payload, n, codec, avro_schema, fltr, implicit_root
-                    )
-                if record_root:
-                    arrays = [
-                        pa.array(
-                            [r[nm] for r in records], type=arrow_schema.field(i).type
-                        )
-                        for i, nm in enumerate(names)
-                    ]
-                else:
-                    arrays = [pa.array(records, type=arrow_schema.field(0).type)]
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+                yield records_to_batch(
+                    records, arrow_schema, record_root, AvroDecodeError
+                )
 
-    return fn
+
+def _scan_file_header(path: str):
+    """Header-only metadata read: magic + meta map + sync, via bounded
+    chunked reads — block payloads are never touched."""
+    with open(path, "rb") as fh:
+        return scan_header_stream(ChunkedReader(fh, error_cls=AvroDecodeError))
+
+
+def _decode(
+    spark: SparkSession,
+    rows: list,
+    reader_schema: Any,
+    fltr: ColumnFilter,
+    include: Any,
+    exclude: Any,
+    bc: Any = None,
+) -> Dataset:
+    """Range rows → Dataset under ``reader_schema`` with the clusions
+    pruned at decode time."""
+    has_filter = include is not None or exclude is not None
+    implicit_root = fltr.include.explicit or fltr.include.is_nothing()
+    dtype = avro_to_spark(reader_schema)
+    record_root = isinstance(dtype, T.StructType)
+    if record_root:
+        out_schema = prune_schema(dtype, fltr, implicit_root) if has_filter else dtype
+    else:
+        out_schema = T.StructType([T.StructField(DEFAULT_COLUMN, dtype, True)])
+    kernel = functools.partial(
+        _decode_ranges,
+        reader_schema=reader_schema,
+        out_schema=out_schema,
+        record_root=record_root,
+        fltr=fltr if (record_root and has_filter) else None,
+        implicit_root=implicit_root,
+        bc=bc,
+    )
+    ds = Dataset(map_ranges(spark, rows, kernel, out_schema))
+    if has_filter and not record_root:
+        ds = ds.select_columns(include, exclude)
+    return ds
 
 
 def from_avro(
@@ -144,105 +167,30 @@ def from_avro(
 
     # conflict validation first (raises ClusionError before any Spark job)
     fltr = ColumnFilter.parse(include, exclude)
-    has_filter = include is not None or exclude is not None
-    implicit_root = fltr.include.explicit or fltr.include.is_nothing()
 
-    spill_dir = os.environ.get("BAMBOO_SPARK_SPILL_DIR", "")
-    master = spark.sparkContext.master or "local"
-    path: Optional[str] = None
-    data: Optional[bytes] = None
-    if isinstance(source, str):
-        path = os.path.abspath(source)
-    elif hasattr(source, "read"):
-        data, path = drain_or_spill(source, _BROADCAST_MAX, spill_dir, master)
-    else:
-        data = bytes(source)
-        if len(data) > _BROADCAST_MAX:
-            data, path = drain_or_spill(
-                io.BytesIO(data), _BROADCAST_MAX, spill_dir, master
-            )
-
-    if path is not None:
-        # bounded-memory metadata pass: header + block-header hops in
-        # O(buffer) chunks, payloads seek-skipped (see pbd.py)
-        with open(path, "rb") as fh:
-            reader = ChunkedReader(fh, error_cls=AvroDecodeError)
-            avro_schema, codec, sync, pos = scan_header_stream(reader)
-            all_blocks = scan_blocks_stream(reader, sync)
-    else:
-        avro_schema, codec, sync, pos = scan_header(data)
-        all_blocks = scan_blocks(data, pos, sync)
-    writer_schema = None
-    if reader_schema is not None:
-        import json as _json
-
-        if _json.dumps(reader_schema, sort_keys=True) != _json.dumps(
-            avro_schema, sort_keys=True
-        ):
-            writer_schema = avro_schema
-            avro_schema = reader_schema
-    dtype = avro_to_spark(avro_schema)
-    record_root = isinstance(dtype, T.StructType)
-    if record_root:
-        out_schema = (
-            prune_schema(dtype, fltr, implicit_root) if has_filter else dtype
-        )
-        assert isinstance(out_schema, T.StructType)
-    else:
-        out_schema = T.StructType([T.StructField(DEFAULT_COLUMN, dtype, True)])
-
-    blocks = [b for b in all_blocks if b[2] > 0]
-    total = sum(n for _, _, n in blocks)
-    if total == 0:
-        return Dataset(spark.createDataFrame([], out_schema))
-
-    n_splits = min(
-        max(spark.sparkContext.defaultParallelism, 1),
-        max(1, -(-total // _TARGET_RECORDS_PER_SPLIT)),
-        len(blocks),
+    path, data = resolve_source(source, spark)
+    # bounded-memory metadata pass: header + block-header hops in
+    # O(buffer) chunks, payloads seek-skipped
+    with open_source(path, data) as fh:
+        reader = ChunkedReader(fh, error_cls=AvroDecodeError)
+        writer_schema, _codec, sync, _body = scan_header_stream(reader)
+        blocks = list(scan_blocks_stream(reader, sync))
+    ranges = plan_ranges(blocks, spark.sparkContext.defaultParallelism)
+    bc = None if data is None or not ranges else spark.sparkContext.broadcast(data)
+    return _decode(
+        spark,
+        [(path, start, end) for start, end in ranges],
+        writer_schema if reader_schema is None else reader_schema,
+        fltr,
+        include,
+        exclude,
+        bc,
     )
-    bc = None if path is not None else spark.sparkContext.broadcast(data)
-    block_df = spark.createDataFrame(
-        blocks,
-        T.StructType(
-            [
-                T.StructField("off", T.LongType()),
-                T.StructField("size", T.LongType()),
-                T.StructField("n", T.LongType()),
-            ]
-        ),
-    ).repartition(n_splits)
-    decoded = block_df.mapInArrow(
-        _make_decoder(
-            avro_schema,
-            codec,
-            out_schema,
-            record_root,
-            fltr if (record_root and has_filter) else None,
-            implicit_root,
-            path,
-            bc,
-            writer_schema,
-        ),
-        out_schema,
-    )
-    ds = Dataset(decoded)
-    if has_filter and not record_root:
-        ds = ds.select_columns(include, exclude)
-    return ds
 
 
 # above this many files the driver-side header sweep for schema merging
 # moves into a Spark job (headers are metadata-sized; payloads untouched)
 _MERGE_DRIVER_MAX_FILES = 64
-
-
-def _scan_file_header(path: str):
-    """Header-only metadata read: magic + meta map + sync, via bounded
-    chunked reads — block payloads are never touched."""
-    with open(path, "rb") as fh:
-        reader = ChunkedReader(fh, error_cls=AvroDecodeError)
-        return scan_header_stream(reader)
 
 
 def read_avro_py(
@@ -252,13 +200,12 @@ def read_avro_py(
     spark: Optional[SparkSession] = None,
     merge_schemas: bool = True,
 ) -> Dataset:
-    """Distributed MULTI-FILE Avro read without the connector jar — the
-    many-files scale path for the pure-Python decoder. One decode task
-    per file; each task parses its own header and block index and
-    decodes with the clusion-pruned reader — no file bytes pass through
-    the driver (the driver reads only per-file *headers*, and only their
-    metadata maps at that). For one huge file use ``from_avro``, which
-    splits by blocks.
+    """Distributed MULTI-FILE Avro read — the many-files scale path.
+    One decode task per file; each task parses its own header and walks
+    its blocks, decoding one block at a time with the clusion-pruned
+    reader — no file bytes pass through the driver (the driver reads
+    only per-file *headers*, and only their metadata maps at that). For
+    one huge file use ``from_avro``, which splits by blocks.
 
     Schema evolution (Avro spec "Schema Resolution"; reference analogue
     avro_direct.cpp:107-166): with ``merge_schemas=True`` (default) the
@@ -272,36 +219,23 @@ def read_avro_py(
     The header sweep runs on the driver below %d files and as a Spark
     metadata job above (schema JSONs, not file bytes, are collected).
     """ % _MERGE_DRIVER_MAX_FILES
-    import glob as _glob
-    import json as _json
     from functools import reduce
-
-    from bamboo_spark.sources._avro_py import merge_avro_schemas
 
     if spark is None:
         from bamboo_spark.session import get_spark
 
         spark = get_spark()
-    if isinstance(paths, str):
-        files = sorted(os.path.abspath(p) for p in _glob.glob(paths)) or [
-            os.path.abspath(paths)
-        ]
-    else:
-        files = [os.path.abspath(p) for p in paths]
-    if not files:
-        raise ValueError("read_avro_py: no input files")
-
+    files = expand_paths(paths, "read_avro_py")
+    # conflict validation first (raises ClusionError before any Spark job)
     fltr = ColumnFilter.parse(include, exclude)
-    has_filter = include is not None or exclude is not None
-    implicit_root = fltr.include.explicit or fltr.include.is_nothing()
 
-    avro_schema, _codec0, _sync0, _pos0 = _scan_file_header(files[0])
+    avro_schema = _scan_file_header(files[0])[0]
     if merge_schemas and len(files) > 1:
         if len(files) <= _MERGE_DRIVER_MAX_FILES:
             uniq = {}
             for p in files:
                 s = _scan_file_header(p)[0]
-                uniq.setdefault(_json.dumps(s, sort_keys=True), s)
+                uniq.setdefault(json.dumps(s, sort_keys=True), s)
         else:
             schema_df = spark.createDataFrame(
                 [(f,) for f in files],
@@ -315,7 +249,7 @@ def read_avro_py(
                     out = []
                     for p in batch.column(0).to_pylist():
                         s = _scan_file_header(p)[0]
-                        out.append(_json.dumps(s, sort_keys=True))
+                        out.append(json.dumps(s, sort_keys=True))
                     yield pa.RecordBatch.from_arrays(
                         [pa.array(out)], names=["schema_json"]
                     )
@@ -328,79 +262,8 @@ def read_avro_py(
                 .distinct()
                 .collect()
             )
-            uniq = {k: _json.loads(k) for k in sorted(keys)}
+            uniq = {k: json.loads(k) for k in sorted(keys)}
         avro_schema = reduce(merge_avro_schemas, uniq.values())
-    dtype = avro_to_spark(avro_schema)
-    record_root = isinstance(dtype, T.StructType)
-    if record_root:
-        out_schema = prune_schema(dtype, fltr, implicit_root) if has_filter else dtype
-    else:
-        out_schema = T.StructType([T.StructField(DEFAULT_COLUMN, dtype, True)])
-    schema_key = _json.dumps(avro_schema, sort_keys=True)
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema_ref = to_arrow_schema(out_schema)
-    names = [f.name for f in out_schema.fields]
-    use_filter = record_root and has_filter
-
-    reader_schema = avro_schema
-
-    def fn(batches):
-        import pyarrow as pa
-
-        from bamboo_spark.sources._avro_py import decode_block_resolved
-
-        for batch in batches:
-            for p in batch.column(0).to_pylist():
-                with open(p, "rb") as fh:
-                    data = fh.read()
-                f_schema, f_codec, f_sync, f_pos = scan_header(data)
-                same = _json.dumps(f_schema, sort_keys=True) == schema_key
-                records = []
-                for off, size, n in scan_blocks(data, f_pos, f_sync):
-                    if same:
-                        records.extend(
-                            decode_block(
-                                data[off : off + size],
-                                n,
-                                f_codec,
-                                f_schema,
-                                fltr if use_filter else None,
-                                implicit_root,
-                            )
-                        )
-                    else:
-                        # evolved file: resolve writer layout against the
-                        # merged reader schema (promotions, default fill,
-                        # writer-only wire-skip)
-                        records.extend(
-                            decode_block_resolved(
-                                data[off : off + size],
-                                n,
-                                f_codec,
-                                f_schema,
-                                reader_schema,
-                                fltr if use_filter else None,
-                                implicit_root,
-                            )
-                        )
-                if record_root:
-                    arrays = [
-                        pa.array(
-                            [r[nm] for r in records],
-                            type=arrow_schema_ref.field(i).type,
-                        )
-                        for i, nm in enumerate(names)
-                    ]
-                else:
-                    arrays = [pa.array(records, type=arrow_schema_ref.field(0).type)]
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema_ref)
-
-    path_df = spark.createDataFrame(
-        [(f,) for f in files], T.StructType([T.StructField("path", T.StringType())])
-    ).repartition(len(files))
-    ds = Dataset(path_df.mapInArrow(fn, out_schema))
-    if has_filter and not record_root:
-        ds = ds.select_columns(include, exclude)
-    return ds
+    return _decode(
+        spark, [(f, 0, None) for f in files], avro_schema, fltr, include, exclude
+    )

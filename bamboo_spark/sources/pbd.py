@@ -1,4 +1,4 @@
-"""``from_pbd`` — length-prefixed protobuf records (PBD format) → Dataset.
+"""``from_pbd`` / ``read_pbd`` — length-prefixed protobuf records (PBD format) → Dataset.
 
 The PBD container (reference cpp/src/pbd.cpp, pbd.hpp) is: an embedded
 ``FileDescriptorSet`` followed by length-prefixed protobuf messages.
@@ -11,119 +11,103 @@ exercises: varint/zigzag/fixed scalars, length-delimited fields, packed
 and unpacked repeated fields, nested messages, enums, and proto2
 default-value fill for missing fields (pbd.cpp:233-278).
 
-Execution model (the 100 TB shape, reference parity at pbd_tests.py:42-58):
+Execution model (the 100 TB shape, reference parity at pbd_tests.py:42-58),
+one range-decode path for every kind of input (see ``_stream``):
 
-1. Driver parses the descriptor header and walks the varint length
-   prefixes to find record *boundaries* — a metadata pass that slices and
-   decodes nothing.
+1. ``from_pbd`` takes one source (bytes, a stream or a path). The driver
+   parses the descriptor header and walks the varint length prefixes
+   with payloads seek-skipped — a metadata pass that decodes nothing —
+   and cuts the record stream into contiguous byte ranges, one per
+   decode task. ``read_pbd`` takes many files: one range per file.
 2. include/exclude clusions prune the descriptor tree BEFORE decode
    (prune_message_desc): excluded fields hit the wire-skip fast path on
    executors, their bytes never parsed (reference pbd.cpp:50-83,
    pbd.hpp:176-207).
-3. Record byte-ranges are distributed and the wire decode runs inside
-   ``mapInPandas`` on executors — Arrow-batched, parallel across cores /
-   a cluster. A path source is re-read range-wise by each task (DFS-
-   friendly); a bytes/stream source is broadcast once.
+3. The one decode kernel ``_decode_ranges`` runs inside ``mapInArrow``:
+   it re-reads each file's descriptor header, checks it against the
+   reader descriptor, and wire-decodes its range one record split at a
+   time, one Arrow batch per split. A path is re-read range-wise by
+   each task (DFS-friendly); a bytes/stream source is broadcast once.
 """
 
 from __future__ import annotations
 
+import functools
 import io
-import os
-from typing import Any, Callable, Iterator, List, Optional, Tuple, Union
+from typing import Any, Iterator, Optional, Union
 
-from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql import SparkSession, types as T
 
 from bamboo_spark.clusions import ColumnFilter
 from bamboo_spark.dataset import Dataset
 from bamboo_spark.sources._pbd_py import (
     MessageDesc,
     PbdDecodeError,
-    decode_range,
-    parse_header,
+    check_wire_compat,
+    decode_message,
     parse_header_stream,
     pbd_to_spark,
     prune_message_desc,
-    scan_record_boundaries,
     scan_record_splits,
 )
-from bamboo_spark.sources._stream import ChunkedReader, drain_or_spill
+from bamboo_spark.sources._stream import (
+    TARGET_RECORDS_PER_SPLIT,
+    ChunkedReader,
+    expand_paths,
+    map_ranges,
+    open_source,
+    plan_ranges,
+    range_rows,
+    records_to_batch,
+    resolve_source,
+)
 
-# Records per decode task, upper bound — keeps tiny files on one task and
-# big files spread across the parallelism without over-splitting.
-_TARGET_RECORDS_PER_SPLIT = 2048
 
-# bytes/stream sources at or under this are broadcast (works on any
-# cluster); larger ones are spilled to $BAMBOO_SPARK_SPILL_DIR (must be
-# cluster-visible on a real deployment) so the driver never holds a
-# whole huge container in memory.
-_BROADCAST_MAX = 64 << 20
-
-
-def _make_decoder(
-    desc: MessageDesc,
-    schema: T.StructType,
-    path: Optional[str],
-    bc: Any,
-) -> Callable[[Iterator[Any]], Iterator[Any]]:
-    """mapInArrow kernel: decode a byte range, emit one Arrow RecordBatch
-    per split. Columnar pa.array construction from the decoded row dicts
-    is C-speed and skips pandas object inference entirely; pyarrow
-    converts int → decimal128 (uint64/fixed64 widening) and dict →
-    struct directly."""
+def _decode_ranges(
+    batches: Iterator[Any], root: MessageDesc, schema: T.StructType, bc: Any = None
+) -> Iterator[Any]:
+    """The PBD decode kernel (``mapInArrow``) over ``(source, start,
+    end)`` range rows: open the source (a path, or the broadcast buffer
+    ``bc``), parse its descriptor header, reject a file whose wire
+    classes differ from the reader descriptor ``root``, and decode the
+    records in [start, end) with ``root`` — one Arrow batch per split of
+    ``TARGET_RECORDS_PER_SPLIT`` records. Protobuf resolution is by
+    field number: writer-only fields wire-skip, reader-only fields
+    default-fill, varint widenings (int32→int64) decode natively."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(schema)
-    names = [f.name for f in schema.fields]
-
-    def fn(batches: Iterator[Any]) -> Iterator[Any]:
-        import pyarrow as pa
-
-        for batch in batches:
-            starts = batch.column(0).to_pylist()
-            ends = batch.column(1).to_pylist()
-            for start, end in zip(starts, ends):
-                if path is not None:
-                    with open(path, "rb") as fh:
-                        fh.seek(start)
-                        buf = fh.read(end - start)
-                    records = decode_range(buf, 0, len(buf), desc)
-                else:
-                    records = decode_range(bc.value, start, end, desc)
-                arrays = [
-                    pa.array([r[nm] for r in records], type=arrow_schema.field(i).type)
-                    for i, nm in enumerate(names)
-                ]
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-    return fn
+    for source, start, end in range_rows(batches):
+        with open_source(source, None if bc is None else bc.value) as fh:
+            reader = ChunkedReader(fh, error_cls=PbdDecodeError)
+            file_root, body = parse_header_stream(reader)
+            try:
+                check_wire_compat(root, file_root)
+            except PbdDecodeError as e:
+                raise PbdDecodeError("PBD file %s: %s" % (source, e)) from e
+            reader.skip(max(start - body, 0))
+            for _, _, _, messages in scan_record_splits(
+                reader, TARGET_RECORDS_PER_SPLIT, end, payloads=True
+            ):
+                records = [decode_message(m, root) for m in messages]
+                yield records_to_batch(records, arrow_schema, True, PbdDecodeError)
 
 
-def _coalesce_splits(
-    raw: List[Tuple[int, int, int]], n_groups: int
-) -> List[Tuple[int, int]]:
-    """Merge adjacent (start, end, n) scan splits into n_groups balanced
-    byte ranges (raw splits carry ~equal record counts, so index-even
-    grouping is record-even)."""
-    m = len(raw)
-    out = []
-    for i in range(n_groups):
-        lo = i * m // n_groups
-        hi = (i + 1) * m // n_groups
-        if hi > lo:
-            out.append((raw[lo][0], raw[hi - 1][1]))
-    return out
-
-
-def _split_ranges(bounds: List[int], n_splits: int) -> List[Tuple[int, int]]:
-    n_records = len(bounds) - 1
-    splits = []
-    for i in range(n_splits):
-        lo = bounds[i * n_records // n_splits]
-        hi = bounds[(i + 1) * n_records // n_splits]
-        if hi > lo:
-            splits.append((lo, hi))
-    return splits
+def _decode(
+    spark: SparkSession,
+    rows: list,
+    root: MessageDesc,
+    fltr: ColumnFilter,
+    has_filter: bool,
+    bc: Any = None,
+) -> Dataset:
+    """Range rows → Dataset under the (clusion-pruned) descriptor."""
+    if has_filter:
+        implicit_root = fltr.include.explicit or fltr.include.is_nothing()
+        root = prune_message_desc(root, fltr, implicit_root)
+    schema = pbd_to_spark(root)
+    kernel = functools.partial(_decode_ranges, root=root, schema=schema, bc=bc)
+    return Dataset(map_ranges(spark, rows, kernel, schema))
 
 
 def from_pbd(
@@ -140,64 +124,20 @@ def from_pbd(
     # conflict validation first (raises ClusionError before any Spark job)
     fltr = ColumnFilter.parse(include, exclude)
 
-    spill_dir = os.environ.get("BAMBOO_SPARK_SPILL_DIR", "")
-    master = spark.sparkContext.master or "local"
-    path: Optional[str] = None
-    data: Optional[bytes] = None
-    if isinstance(source, str):
-        path = os.path.abspath(source)
-    elif hasattr(source, "read"):
-        data, path = drain_or_spill(source, _BROADCAST_MAX, spill_dir, master)
-    else:
-        data = bytes(source)
-        if len(data) > _BROADCAST_MAX:
-            data, path = drain_or_spill(
-                io.BytesIO(data), _BROADCAST_MAX, spill_dir, master
-            )
-
-    if path is not None:
-        # bounded-memory metadata pass: header + varint boundary walk in
-        # O(buffer) chunks, record payloads seek-skipped (reference
-        # analogue: the 64 KiB buffered stream, bind.cpp:131-168)
-        with open(path, "rb") as fh:
-            reader = ChunkedReader(fh, error_cls=PbdDecodeError)
-            root, _body = parse_header_stream(reader)
-            if include is not None or exclude is not None:
-                implicit_root = fltr.include.explicit or fltr.include.is_nothing()
-                root = prune_message_desc(root, fltr, implicit_root)
-            schema = pbd_to_spark(root)
-            raw_splits = scan_record_splits(reader, _TARGET_RECORDS_PER_SPLIT)
-        n_records = sum(s[2] for s in raw_splits)
-        if n_records == 0:
-            return Dataset(spark.createDataFrame([], schema))
-        n_splits = min(
-            max(spark.sparkContext.defaultParallelism, 1), len(raw_splits)
-        )
-        splits = _coalesce_splits(raw_splits, n_splits)
-    else:
-        root, body = parse_header(data)
-        if include is not None or exclude is not None:
-            implicit_root = fltr.include.explicit or fltr.include.is_nothing()
-            root = prune_message_desc(root, fltr, implicit_root)
-        schema = pbd_to_spark(root)
-
-        bounds = scan_record_boundaries(data, body)
-        n_records = len(bounds) - 1
-        if n_records == 0:
-            return Dataset(spark.createDataFrame([], schema))
-
-        n_splits = min(
-            max(spark.sparkContext.defaultParallelism, 1),
-            max(1, -(-n_records // _TARGET_RECORDS_PER_SPLIT)),
-        )
-        splits = _split_ranges(bounds, n_splits)
-
-    bc = None if path is not None else spark.sparkContext.broadcast(data)
-    split_df: DataFrame = spark.createDataFrame(
-        splits, T.StructType([T.StructField("start", T.LongType()), T.StructField("end", T.LongType())])
-    ).repartition(len(splits))
-    decoded = split_df.mapInArrow(_make_decoder(root, schema, path, bc), schema)
-    return Dataset(decoded)
+    path, data = resolve_source(source, spark)
+    # bounded-memory metadata pass: header + varint boundary walk in
+    # O(buffer) chunks, record payloads seek-skipped (reference
+    # analogue: the 64 KiB buffered stream, bind.cpp:131-168)
+    with open_source(path, data) as fh:
+        reader = ChunkedReader(fh, error_cls=PbdDecodeError)
+        root, _body = parse_header_stream(reader)
+        splits = list(scan_record_splits(reader, TARGET_RECORDS_PER_SPLIT))
+    ranges = plan_ranges(splits, spark.sparkContext.defaultParallelism)
+    bc = None if data is None or not ranges else spark.sparkContext.broadcast(data)
+    rows = [(path, start, end) for start, end in ranges]
+    return _decode(
+        spark, rows, root, fltr, include is not None or exclude is not None, bc
+    )
 
 
 def read_pbd(
@@ -209,79 +149,27 @@ def read_pbd(
     """Distributed MULTI-FILE PBD read — the many-files scale path.
 
     One decode task per file; each task opens its file, parses the
-    descriptor header, prunes it with the clusions, and wire-decodes —
-    NO file bytes ever pass through the driver (it reads only the first
-    file's header to fix the output schema; every task re-derives and
-    validates its own). This is how a 100 TB PBD dataset (thousands of
+    descriptor header, checks it against the reader descriptor, and
+    wire-decodes one record split at a time with the clusion-pruned
+    descriptor — NO file bytes ever pass through the driver (it reads
+    only the first file's header to fix the reader descriptor and the
+    output schema). This is how a 100 TB PBD dataset (thousands of
     container files on a DFS) parallelizes; for one huge file use
     ``from_pbd``, which splits a single record stream by byte ranges.
     """
-    import glob as _glob
-
     if spark is None:
         from bamboo_spark.session import get_spark
 
         spark = get_spark()
-    if isinstance(paths, str):
-        files = sorted(os.path.abspath(p) for p in _glob.glob(paths)) or [
-            os.path.abspath(paths)
-        ]
-    else:
-        files = [os.path.abspath(p) for p in paths]
-    if not files:
-        raise ValueError("read_pbd: no input files")
-
+    files = expand_paths(paths, "read_pbd")
     fltr = ColumnFilter.parse(include, exclude)
-    implicit_root = fltr.include.explicit or fltr.include.is_nothing()
-    has_filter = include is not None or exclude is not None
 
     with open(files[0], "rb") as fh:
-        root, _ = parse_header_stream(
-            ChunkedReader(fh, error_cls=PbdDecodeError)
-        )
-    if has_filter:
-        root = prune_message_desc(root, fltr, implicit_root)
-    schema = pbd_to_spark(root)
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema_ref = to_arrow_schema(schema)
-    names = [f.name for f in schema.fields]
-
-    def fn(batches: Iterator[Any]) -> Iterator[Any]:
-        import pyarrow as pa
-
-        from bamboo_spark.sources._pbd_py import (
-            PbdDecodeError,
-            check_wire_compat as _compat,
-            parse_header as _ph,
-        )
-
-        for batch in batches:
-            for p in batch.column(0).to_pylist():
-                with open(p, "rb") as fh:
-                    data = fh.read()
-                # schema evolution: decode with the READER descriptor.
-                # Protobuf resolution is by field number — writer-only
-                # fields wire-skip, reader-only fields default-fill,
-                # varint widenings (int32→int64) decode natively; the
-                # per-file descriptor is parsed only to reject wire-class
-                # changes up front (check_wire_compat docstring).
-                file_root, body = _ph(data)
-                try:
-                    _compat(root, file_root)
-                except PbdDecodeError as e:
-                    raise PbdDecodeError("PBD file %s vs %s: %s" % (p, files[0], e))
-                records = decode_range(data, body, len(data), root)
-                arrays = [
-                    pa.array(
-                        [r[nm] for r in records], type=arrow_schema_ref.field(i).type
-                    )
-                    for i, nm in enumerate(names)
-                ]
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema_ref)
-
-    path_df = spark.createDataFrame(
-        [(f,) for f in files], T.StructType([T.StructField("path", T.StringType())])
-    ).repartition(len(files))
-    return Dataset(path_df.mapInArrow(fn, schema))
+        root, _ = parse_header_stream(ChunkedReader(fh, error_cls=PbdDecodeError))
+    return _decode(
+        spark,
+        [(f, 0, None) for f in files],
+        root,
+        fltr,
+        include is not None or exclude is not None,
+    )

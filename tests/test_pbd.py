@@ -1,9 +1,16 @@
-"""PBD source tests against the reference's golden file
-(reference python/bamboo_tests/data/example.pbd; expectations from
-pbd_tests.py:62-92 / FIXTURES.md F7), plus executor-decode perf and
-decode-time clusion pushdown gates (pbd_tests.py:42-58)."""
+"""PBD source tests against the golden file ``tests/data/example.pbd``
+(expectations from the reference's pbd_tests.py:62-92 / FIXTURES.md F7),
+plus executor-decode perf and decode-time clusion pushdown gates
+(pbd_tests.py:42-58).
+
+The golden file is a reconstruction: the reference's own
+python/bamboo_tests/data/example.pbd is not part of this repository, so
+``tests/data/make_example_pbd.py`` rebuilds one record with the F7
+schema and values (proto2, ``sd``/``de`` absent so they default-fill).
+The F7 assertions below are the reference's, unchanged."""
 
 import math
+import os
 import struct
 import time
 
@@ -13,7 +20,7 @@ from bamboo_spark import from_pbd
 from bamboo_spark.clusions import ClusionError
 from tests.conftest import assert_frame
 
-GOLDEN = "/root/reference/python/bamboo_tests/data/example.pbd"
+GOLDEN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "example.pbd")
 
 
 # ---------------------------------------------------------------- encoder

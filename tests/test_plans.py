@@ -1156,3 +1156,41 @@ def test_dup_pagerank_shuffle_budget(spark):
     assert s.count("Exchange") <= 1, s
     f = plan_of(df)
     assert "CartesianProduct" not in f and "BatchEvalPython" not in f
+
+
+def _codegen_ops(df) -> list:
+    """Run ``df`` and return the operators of its final executed plan
+    that sit inside WholeStageCodegen (printed as ``*(N) <Op>``)."""
+    import re
+
+    df.collect()
+    final = simple_plan(df).split("== Initial Plan ==")[0]
+    return re.findall(r"\*\(\d+\) (\w+)", final)
+
+
+def test_wide_stages_stay_in_codegen(spark):
+    # whole-stage codegen silently falls back to interpreted evaluation
+    # for any operator wider than spark.sql.codegen.maxFields (Spark's
+    # default is 100); session.py raises it to 256 so the 128-lane
+    # minhash signature aggregate (129 columns) and a flatten projection
+    # past 100 columns stay compiled. At maxFields=100 neither does.
+    from bamboo_spark.operators.dedup import minhash_signatures
+
+    docs = spark.createDataFrame(
+        [(i, "the quick brown fox %d jumps over" % i) for i in range(20)],
+        "doc_id long, text string",
+    )
+    sig = minhash_signatures(docs)
+    assert len(sig.columns) == 129
+    assert _codegen_ops(sig).count("HashAggregate") == 2  # partial + final
+
+    width = 130
+    nested = spark.createDataFrame(
+        [(1, [tuple(range(k, k + width)) for k in range(3)])],
+        "id long, items array<struct<%s>>"
+        % ", ".join("f%d long" % j for j in range(width)),
+    )
+    flat = Dataset(nested).flatten().df
+    assert len(flat.columns) == width + 1
+    ops = _codegen_ops(flat)
+    assert "Generate" in ops and "Project" in ops, ops

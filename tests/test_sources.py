@@ -757,11 +757,13 @@ def test_avro_snappy_codec(spark, tmp_path):
 
     blk = _avro_bytes(schema, recs[:4], codec="snappy")
     # find the block payload: after header(sync) — decode via scanners
-    from bamboo_spark.sources._avro_py import scan_blocks, scan_header
+    from bamboo_spark.sources._avro_py import scan_blocks_stream, scan_header_stream
+    from bamboo_spark.sources._stream import ChunkedReader
 
-    _, codec, sync, pos = scan_header(blk)
-    (off, size, n), = scan_blocks(blk, pos, sync)
-    payload = bytearray(blk[off : off + size])
+    reader = ChunkedReader(io.BytesIO(blk), error_cls=AvroDecodeError)
+    _, codec, sync, pos = scan_header_stream(reader)
+    (_, _, n, payload), = scan_blocks_stream(reader, sync, payloads=True)
+    payload = bytearray(payload)
     payload[-1] ^= 0xFF  # flip CRC byte
     with pytest.raises(AvroDecodeError):
         decompress_block(bytes(payload), "snappy")
@@ -1211,12 +1213,7 @@ def test_avro_writer_multibranch_union_and_named_reuse(spark, tmp_path):
     # unions stay un-readable as Spark schemas (reference parity), so
     # verify at the container-decode level; named-enum reuse by
     # reference must encode and round-trip through the full read path
-    from bamboo_spark.sources._avro_py import (
-        decode_block,
-        scan_blocks,
-        scan_header,
-        write_container,
-    )
+    from bamboo_spark.sources._avro_py import decode_container, write_container
     from bamboo_spark.sources.avro import read_avro_py
 
     gen_schema = {
@@ -1235,11 +1232,7 @@ def test_avro_writer_multibranch_union_and_named_reuse(spark, tmp_path):
     ]
     p = str(tmp_path / "union.avro")
     write_container(p, gen_schema, records)
-    data = open(p, "rb").read()
-    schema, codec, sync, pos = scan_header(data)
-    vals = []
-    for off, size, n in scan_blocks(data, pos, sync):
-        vals.extend(decode_block(data[off : off + size], n, codec, schema))
+    vals, _ = decode_container(open(p, "rb").read())
     by_k = {v["k"]: v for v in vals}
     assert by_k[0]["sl"] == "txt" and by_k[0]["ls"] is None
     assert by_k[1]["sl"] == 42 and by_k[1]["ls"] == 7      # NOT "42"

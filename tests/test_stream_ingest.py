@@ -1,13 +1,15 @@
-"""Bounded-memory single-file ingest + decoder error hygiene.
+"""Bounded-memory ingest, one range-decode path, decoder error hygiene.
 
 The reference streams container files through a 64 KiB buffered input
 stream and never materializes them (reference cpp/src/bind.cpp:131-168);
-these tests pin the same discipline on our driver-side metadata passes
-(`ChunkedReader` + the *_stream scan twins) and pin the contract that
-corrupt bytes always surface as the typed decode error
-(PbdDecodeError / AvroDecodeError; reference truncation error
-pbd.hpp:195-199), never a bare IndexError/struct.error/UnicodeDecodeError
-or a silently truncated value.
+these tests pin the same discipline on the Avro and PBD scanners
+(``ChunkedReader`` + the header and boundary scans) and on their one
+decode kernel each, pin that every entry point (bytes, path, stream,
+multi-file) decodes to the same rows, and pin the contract that corrupt
+bytes always surface as the typed decode error (PbdDecodeError /
+AvroDecodeError; reference truncation error pbd.hpp:195-199), never a
+bare IndexError/struct.error/UnicodeDecodeError or a silently truncated
+value.
 """
 
 import io
@@ -15,21 +17,19 @@ import json
 import os
 import struct
 import tracemalloc
+import types
 
 import pytest
 
 from bamboo_spark.sources._avro_py import (
     AvroDecodeError,
-    decode_container,
     scan_blocks_stream,
     scan_header_stream,
 )
 from bamboo_spark.sources._pbd_py import (
     PbdDecodeError,
-    decode_message,
     parse_header,
     parse_header_stream,
-    scan_record_boundaries,
     scan_record_splits,
 )
 from bamboo_spark.sources._stream import ChunkedReader, drain_or_spill
@@ -90,7 +90,7 @@ def test_pbd_metadata_pass_is_bounded(tmp_path):
     try:
         reader = ChunkedReader(fh, bufsize=BUF, error_cls=PbdDecodeError)
         root, _ = parse_header_stream(reader)
-        splits = scan_record_splits(reader, records_per_split=32)
+        splits = list(scan_record_splits(reader, records_per_split=32))
     finally:
         fh.close()
     assert sum(s[2] for s in splits) == n
@@ -138,7 +138,7 @@ def test_avro_metadata_pass_is_bounded(tmp_path):
     try:
         reader = ChunkedReader(fh, bufsize=BUF, error_cls=AvroDecodeError)
         schema, codec, sync, pos = scan_header_stream(reader)
-        blocks = scan_blocks_stream(reader, sync)
+        blocks = list(scan_blocks_stream(reader, sync))
     finally:
         fh.close()
     assert len(blocks) == n_blocks
@@ -170,6 +170,218 @@ def test_from_pbd_large_file_never_materializes_on_driver(spark, tmp_path):
     assert row["n"] == n
     assert row["bytes"] == n * 256 * 1024
     assert row["ids"] == n * (n - 1) // 2
+
+
+def _capture_kernel(monkeypatch, read):
+    """Run ``read()`` with ``mapInArrow`` spied on; return the decode
+    kernel it planned and that kernel's input as Arrow batches."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    seen = []
+    real = DataFrame.mapInArrow
+
+    def spy(self, func, schema, *a, **kw):
+        seen.append((self, func))
+        return real(self, func, schema, *a, **kw)
+
+    monkeypatch.setattr(DataFrame, "mapInArrow", spy)
+    read()
+    (rows_df, kernel), = seen
+    return kernel, rows_df.toArrow().to_batches()
+
+
+def _kernel_peak(kernel, batches):
+    """Run a kernel in-process: (batches emitted, their rows, peak
+    Python-heap bytes while it ran)."""
+    tracemalloc.start()
+    try:
+        n_batches = n_rows = 0
+        for out in kernel(iter(batches)):
+            n_batches += 1
+            n_rows += out.num_rows
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    return n_batches, n_rows, peak
+
+
+def test_read_avro_py_task_holds_one_block(spark, tmp_path, monkeypatch):
+    # a multi-file task decodes block by block: one Arrow batch per
+    # block, and its heap peaks at O(block), not at the whole file plus
+    # all of its decoded rows
+    from bamboo_spark import read_avro_py
+    from bamboo_spark.sources._avro_py import write_container
+
+    schema = {
+        "type": "record",
+        "name": "r",
+        "fields": [{"name": "id", "type": "long"}, {"name": "blob", "type": "bytes"}],
+    }
+    n, per_block = 512, 8
+    p = str(tmp_path / "big.avro")
+    write_container(
+        p,
+        schema,
+        [{"id": i, "blob": bytes([i & 0xFF]) * (64 << 10)} for i in range(n)],
+        records_per_block=per_block,
+    )
+    size = os.path.getsize(p)
+    kernel, batches = _capture_kernel(
+        monkeypatch, lambda: read_avro_py([p], spark=spark)
+    )
+    n_batches, n_rows, peak = _kernel_peak(kernel, batches)
+    assert n_rows == n
+    assert peak < size / 8, "task held %d bytes for a %d-byte file" % (peak, size)
+    assert n_batches == n // per_block
+
+
+def test_read_pbd_task_holds_one_split(spark, tmp_path, monkeypatch):
+    # same bound for PBD: one Arrow batch per record split, heap O(split)
+    from bamboo_spark import read_pbd
+
+    n, payload = 65536, 512
+    desc = _message_desc("Rec", [_field_desc("id", 1, 3), _field_desc("blob", 2, 12)])
+    p = tmp_path / "big.pbd"
+    p.write_bytes(
+        _container(
+            [desc],
+            "t.Rec",
+            [_tag(1, 0) + _varint(i) + _ld(2, bytes([i & 0xFF]) * payload) for i in range(n)],
+        )
+    )
+    size = os.path.getsize(p)
+    kernel, batches = _capture_kernel(
+        monkeypatch, lambda: read_pbd([str(p)], spark=spark)
+    )
+    n_batches, n_rows, peak = _kernel_peak(kernel, batches)
+    assert n_rows == n
+    assert peak < size / 4, "task held %d bytes for a %d-byte file" % (peak, size)
+    assert n_batches == n // 2048  # TARGET_RECORDS_PER_SPLIT
+
+
+# ---------------------------------------- entry-point equivalence
+
+
+def _rows(ds):
+    return sorted(
+        (json.dumps(r.asDict(recursive=True), sort_keys=True, default=repr) for r in ds.df.collect())
+    )
+
+
+def _read_through(kind, data, tmp_path, from_x, read_x, **kw):
+    """Decode one container through one entry point."""
+    p = tmp_path / ("src-%s" % kind)
+    p.write_bytes(data)
+    if kind == "bytes":
+        return from_x(data, **kw)
+    if kind == "stream":
+        return from_x(io.BytesIO(data), **kw)
+    if kind == "path":
+        return from_x(str(p), **kw)
+    return read_x([str(p)], **kw)
+
+
+_AVRO_EQUIV_SCHEMA = {
+    "type": "record",
+    "name": "r",
+    "fields": [
+        {"name": "id", "type": "int"},
+        {"name": "s", "type": "string"},
+        {
+            "name": "n",
+            "type": {
+                "type": "record",
+                "name": "n",
+                "fields": [
+                    {"name": "x", "type": "long"},
+                    {"name": "ys", "type": {"type": "array", "items": "double"}},
+                ],
+            },
+        },
+        {"name": "opt", "type": ["null", "string"]},
+    ],
+}
+
+
+_AVRO_EQUIV_MODES = {
+    "include": {"include": ["id", "n.x"]},
+    "exclude": {"exclude": ["s", "n.ys"]},
+    "reader_schema": {
+        "reader_schema": {
+            "type": "record",
+            "name": "r",
+            "fields": [
+                {"name": "id", "type": "long"},  # int -> long promotion
+                {"name": "opt", "type": ["null", "string"]},
+                {"name": "added", "type": "string", "default": "dflt"},
+            ],
+        }
+    },
+}
+
+
+@pytest.mark.parametrize(
+    "kind,mode",
+    [
+        pytest.param(kind, mode, id="%s-%s" % (kind, mode))
+        for mode in _AVRO_EQUIV_MODES
+        for kind in ("bytes", "path", "stream", "read")
+        # read_avro_py has no reader_schema argument
+        if not (kind == "read" and mode == "reader_schema")
+    ],
+)
+def test_avro_entry_points_agree(spark, tmp_path, kind, mode):
+    from bamboo_spark import from_avro, read_avro_py
+    from tests.test_sources import _avro_bytes
+
+    kw = _AVRO_EQUIV_MODES[mode]
+    records = [
+        {
+            "id": i,
+            "s": "s%d" % i,
+            "n": {"x": i * 7, "ys": [i / 2.0] * (i % 3)},
+            "opt": None if i % 4 == 0 else "o%d" % i,
+        }
+        for i in range(50)
+    ]
+    data = _avro_bytes(_AVRO_EQUIV_SCHEMA, records, block_size=6)
+    want = _rows(from_avro(data, spark=spark, **kw))
+    assert len(want) == 50
+    got = _rows(_read_through(kind, data, tmp_path, from_avro, read_avro_py, spark=spark, **kw))
+    assert got == want
+
+
+@pytest.mark.parametrize("kind", ["bytes", "path", "stream", "read"])
+@pytest.mark.parametrize(
+    "mode", [{"include": ["id", "m"]}, {"exclude": ["s"]}], ids=["include", "exclude"]
+)
+def test_pbd_entry_points_agree(spark, tmp_path, kind, mode):
+    from bamboo_spark import from_pbd, read_pbd
+
+    inner = _message_desc("Inner", [_field_desc("v", 1, 3)])
+    desc = _message_desc(
+        "Rec",
+        [
+            _field_desc("id", 1, 3),
+            _field_desc("s", 2, 9),
+            _field_desc("r", 3, 3, label=3),
+            _field_desc("m", 4, 11, type_name=".t.Rec.Inner"),
+        ],
+        nested=[inner],
+    )
+    records = [
+        _tag(1, 0)
+        + _varint(i)
+        + _ld(2, b"s%d" % i)
+        + b"".join(_tag(3, 0) + _varint(j) for j in range(i % 3))
+        + _ld(4, _tag(1, 0) + _varint(i * 5))
+        for i in range(5000)  # more than one record split
+    ]
+    data = _container([desc], "t.Rec", records)
+    want = _rows(from_pbd(data, spark=spark, **mode))
+    assert len(want) == 5000
+    got = _rows(_read_through(kind, data, tmp_path, from_pbd, read_pbd, spark=spark, **mode))
+    assert got == want
 
 
 def test_drain_or_spill_roundtrip(tmp_path):
@@ -228,11 +440,31 @@ def _pbd_hygiene_container():
     return _container([desc], "t.Rec", records)
 
 
+def _run_kernel(kernel, data, **params):
+    """Run a decode kernel in-process over one whole-container range
+    row, the container held as the broadcast buffer (``io.BytesIO``)."""
+    import pyarrow as pa
+
+    rows = pa.RecordBatch.from_pydict(
+        {
+            "source": pa.array([None], pa.string()),
+            "start": pa.array([0], pa.int64()),
+            "end": pa.array([None], pa.int64()),
+        }
+    )
+    bc = types.SimpleNamespace(value=data)
+    return list(kernel(iter([rows]), bc=bc, **params))
+
+
 def test_pbd_corrupt_bytes_raise_only_pbd_decode_error():
     from hypothesis import given, settings, strategies as st
 
+    from bamboo_spark.sources._pbd_py import pbd_to_spark
+    from bamboo_spark.sources.pbd import _decode_ranges
+
     base = _pbd_hygiene_container()
     root, body = parse_header(base)
+    schema = pbd_to_spark(root)
 
     @settings(max_examples=200, deadline=None)
     @given(
@@ -246,11 +478,15 @@ def test_pbd_corrupt_bytes_raise_only_pbd_decode_error():
         data[pos] = val
         data = bytes(data)
         try:
-            bounds = scan_record_boundaries(data, body)
-            for lo, hi in zip(bounds, bounds[1:]):
-                decode_message(data[lo:hi], root)
+            reader = ChunkedReader(io.BytesIO(data), error_cls=PbdDecodeError)
+            parse_header_stream(reader)
+            list(scan_record_splits(reader, records_per_split=3))
         except PbdDecodeError:
             pass  # the only exception allowed to escape
+        try:
+            _run_kernel(_decode_ranges, data, root=root, schema=schema)
+        except PbdDecodeError:
+            pass
 
     run()
 
@@ -258,6 +494,9 @@ def test_pbd_corrupt_bytes_raise_only_pbd_decode_error():
 def test_avro_corrupt_bytes_raise_only_avro_decode_error():
     from hypothesis import given, settings, strategies as st
     from tests.test_sources import _avro_bytes
+
+    from bamboo_spark.sources._avro_py import avro_to_spark, scan_header
+    from bamboo_spark.sources.avro import _decode_ranges
 
     schema = {
         "type": "record",
@@ -274,9 +513,14 @@ def test_avro_corrupt_bytes_raise_only_avro_decode_error():
         block_size=3,
     )
     # body starts after the header (first sync marker ends it)
-    from bamboo_spark.sources._avro_py import scan_header
-
-    _, _, _, body = scan_header(base)
+    _, _, sync, body = scan_header(base)
+    params = dict(
+        reader_schema=schema,
+        out_schema=avro_to_spark(schema),
+        record_root=True,
+        fltr=None,
+        implicit_root=True,
+    )
 
     @settings(max_examples=200, deadline=None)
     @given(st.integers(0, len(base) - 1), st.integers(0, 255))
@@ -285,12 +529,44 @@ def test_avro_corrupt_bytes_raise_only_avro_decode_error():
             return
         data = bytearray(base)
         data[pos] = val
+        data = bytes(data)
         try:
-            decode_container(bytes(data))
+            reader = ChunkedReader(io.BytesIO(data), error_cls=AvroDecodeError)
+            reader.skip(body)
+            list(scan_blocks_stream(reader, sync))
         except AvroDecodeError:
             pass  # the only exception allowed to escape
+        try:
+            _run_kernel(_decode_ranges, data, **params)
+        except AvroDecodeError:
+            pass
 
     run()
+
+
+def test_avro_value_wider_than_its_column_is_decode_error():
+    # an "int" field whose varint holds 2**40 (payload written as long,
+    # metadata claiming int) cannot fit the int32 column: the kernel
+    # must report the corrupt file, not leak an Arrow conversion error
+    from tests.test_sources import _avro_bytes
+
+    from bamboo_spark.sources._avro_py import avro_to_spark
+    from bamboo_spark.sources.avro import _decode_ranges
+
+    def rec(t):
+        return {"type": "record", "name": "r", "fields": [{"name": "a", "type": t}]}
+
+    data = _avro_bytes(rec("int"), [{"a": 1 << 40}], write_schema=rec("long"))
+    with pytest.raises(AvroDecodeError, match="does not fit"):
+        _run_kernel(
+            _decode_ranges,
+            data,
+            reader_schema=rec("int"),
+            out_schema=avro_to_spark(rec("int")),
+            record_root=True,
+            fltr=None,
+            implicit_root=True,
+        )
 
 
 def test_spill_requires_shared_dir_on_cluster_master():
