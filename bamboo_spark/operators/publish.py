@@ -1289,66 +1289,6 @@ def _rel_of(abs_uri: str, rel_files) -> Optional[str]:
     return None
 
 
-def _distributed_file_stats(
-    spark: SparkSession,
-    fs,
-    table_dir: str,
-    rel_files,
-    cols,
-    schema_json: Optional[str] = None,
-) -> dict:
-    """Per-file ``{relpath: {col: [min, max]}}`` via ONE distributed
-    Spark job per version dir: scan the files column-pruned to ``cols``,
-    group by ``input_file_name()``, min/max per file. Works on EVERY
-    backend (posix, ``file:``, ``hdfs:``, object stores) because the
-    executors read the files wherever they live — this is what lets
-    stats be recorded AT WRITE TIME (the cluster just produced the
-    files) instead of a posix-only driver loop after the fact. Hive
-    partition columns are real attributes under a basePath-anchored
-    read, so stats on partition columns work too (constant per file)."""
-    from pyspark.sql import functions as F, types as T
-
-    if not rel_files or not cols:
-        return {}
-    by_base: dict = {}
-    for f in rel_files:
-        by_base.setdefault(_ref_group(fs, table_dir, f), []).append(f)
-    out: dict = {}
-    for base, fl in by_base.items():
-        reader = spark.read
-        if schema_json:
-            reader = reader.schema(
-                T.StructType.fromJson(json.loads(schema_json))
-            )
-        df = reader.option(
-            "basePath", base
-        ).parquet(*[_ref_path(fs, table_dir, f) for f in fl])
-        cs = [c for c in cols if c in df.columns]
-        if not cs:
-            continue
-        rows = (
-            df.groupBy(F.input_file_name().alias("_f"))
-            .agg(
-                *[F.min(F.col(c)).alias("_mn%d" % i) for i, c in enumerate(cs)],
-                *[F.max(F.col(c)).alias("_mx%d" % i) for i, c in enumerate(cs)],
-            )
-            .collect()  # O(files in this version dir) — metadata-sized
-        )
-        for r in rows:
-            rel = _rel_of(r["_f"], fl)
-            if rel is None:
-                continue
-            st = {}
-            for i, c in enumerate(cs):
-                mn, mx = r["_mn%d" % i], r["_mx%d" % i]
-                if mn is None:
-                    continue
-                st[c] = [_json_stat(mn), _json_stat(mx)]
-            if st:
-                out[rel] = st
-    return out
-
-
 _BLOOM_M = 16384  # bits per file per column (2 KB) — plenty for the
 _BLOOM_K = 5      # ~128 MB-file distinct-value counts point lookups hit
 
@@ -1380,12 +1320,12 @@ def _bloom_canon_py(value) -> Optional[str]:
 
 def _bloom_positions_py(value, m_bits: int, k: int) -> Optional[List[int]]:
     """The k bloom bit positions for ``value`` — PURE-PYTHON twin of
-    the Spark expression in :func:`_distributed_file_blooms`. Both
-    sides hash ``md5(canon(value) + ':' + str(i))`` (one canonical
-    formatter, see :func:`_bloom_canon_py`) and take the first 60 bits
-    mod m, so a position computed on the driver at planning time
-    matches one computed by executors at build time exactly. None for
-    values whose canonical form isn't defined."""
+    :func:`_bloom_position_col`. Both sides hash ``md5(canon(value) +
+    ':' + str(i))`` (one canonical formatter, see
+    :func:`_bloom_canon_py`) and take the first 60 bits mod m, so a
+    position computed on the driver at planning time matches one
+    computed by executors at build time exactly. None for values whose
+    canonical form isn't defined."""
     import hashlib
 
     canon = _bloom_canon_py(value)
@@ -1443,96 +1383,18 @@ def _bloom_canon_expr(df: DataFrame, c: str):
     )
 
 
-def _distributed_file_blooms(
-    spark: SparkSession,
-    fs,
-    table_dir: str,
-    rel_files,
-    cols,
-    schema_json: Optional[str] = None,
-    m_bits: int = _BLOOM_M,
-    k: int = _BLOOM_K,
-) -> dict:
-    """Per-file ``{relpath: {col: {m, k, b64}}}`` bloom filters, built
-    by ONE distributed job per version dir: each row contributes its k
-    md5-derived bit positions, collected as a per-file distinct set
-    (bounded by m bits) and packed into a bitset on the driver. The
-    collect is O(files × m/8) bytes — bounded by the BATCH being
-    published when called at write time (the intended path), never by
-    the table."""
-    import base64
+def _bloom_position_col(canon, i: int):
+    """Bloom bit position ``i`` of a canonical-string Column — the
+    Spark twin of :func:`_bloom_positions_py`: the first 15 hex chars
+    of ``md5(canon + ':' + i)`` (60 bits, fits a long; ``conv(..., 16,
+    10)`` matches Python ``int(hex, 16)``) mod ``_BLOOM_M``."""
+    from pyspark.sql import functions as F
 
-    from pyspark.sql import functions as F, types as T
-
-    if not rel_files or not cols:
-        return {}
-    by_base: dict = {}
-    for f in rel_files:
-        by_base.setdefault(_ref_group(fs, table_dir, f), []).append(f)
-    out: dict = {}
-    for base, fl in by_base.items():
-        reader = spark.read
-        if schema_json:
-            reader = reader.schema(
-                T.StructType.fromJson(json.loads(schema_json))
-            )
-        df = reader.option(
-            "basePath", base
-        ).parquet(*[_ref_path(fs, table_dir, f) for f in fl])
-        cs = [c for c in cols if c in df.columns]
-        if not cs:
-            continue
-        aggs = []
-        for ci, c in enumerate(cs):
-            for i in range(k):
-                # first 15 hex chars of md5 = 60 bits → fits a long;
-                # conv(..., 16, 10) matches Python int(hex, 16)
-                pos = F.pmod(
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    _bloom_canon_expr(df, c),
-                                    F.lit(":%d" % i),
-                                )
-                            ),
-                            1,
-                            15,
-                        ),
-                        16,
-                        10,
-                    ).cast("long"),
-                    F.lit(m_bits),
-                ).cast("int")
-                aggs.append(
-                    F.collect_set(pos).alias("p_%d_%d" % (ci, i))
-                )
-        rows = (
-            df.groupBy(F.input_file_name().alias("_f"))
-            .agg(*aggs)
-            .collect()
-        )
-        for r in rows:
-            rel = _rel_of(r["_f"], fl)
-            if rel is None:
-                continue
-            per_col = {}
-            for ci, c in enumerate(cs):
-                bits = bytearray(m_bits // 8)
-                any_pos = False
-                for i in range(k):
-                    for pos in r["p_%d_%d" % (ci, i)] or []:
-                        bits[pos // 8] |= 1 << (pos % 8)
-                        any_pos = True
-                if any_pos:
-                    per_col[c] = {
-                        "m": m_bits,
-                        "k": k,
-                        "b64": base64.b64encode(bytes(bits)).decode(),
-                    }
-            if per_col:
-                out[rel] = per_col
-    return out
+    digest = F.md5(F.concat(canon, F.lit(":%d" % i)))
+    return F.pmod(
+        F.conv(F.substring(digest, 1, 15), 16, 10).cast("long"),
+        F.lit(_BLOOM_M),
+    ).cast("int")
 
 
 def _distributed_file_indexes(
@@ -1543,15 +1405,18 @@ def _distributed_file_indexes(
     stats_cols,
     bloom_cols,
     schema_json: Optional[str] = None,
-    m_bits: int = _BLOOM_M,
-    k: int = _BLOOM_K,
 ):
-    """Min/max stats AND bloom filters in ONE distributed job per
-    version dir: the same ``groupBy(input_file_name())`` scan carries
-    both the min/max aggregates and the bloom bit-position sets, so a
-    write that indexes both pays one pass over its delta files instead
-    of two. Returns ``(stats_dict, blooms_dict)`` shaped exactly like
-    :func:`_distributed_file_stats` / :func:`_distributed_file_blooms`."""
+    """Per-file ``({relpath: {col: [min, max]}}, {relpath: {col: {m, k,
+    b64}}})`` — min/max stats and equality blooms from ONE distributed
+    job per version dir: scan the files column-pruned to the index
+    columns and group by ``input_file_name()``; each file's group
+    carries the min/max aggregates and, per bloom column, the distinct
+    sets of its k bit positions, packed into a bitset on the driver.
+    The executors read the files wherever they live, so this works on
+    every backend (posix, ``file:``, ``hdfs:``, object stores); hive
+    partition columns are real attributes under the basePath-anchored
+    read. The collect is O(files × m/8) bytes — bounded by the batch
+    being indexed, never by the table."""
     import base64
 
     from pyspark.sql import functions as F, types as T
@@ -1583,26 +1448,11 @@ def _distributed_file_indexes(
             aggs.append(F.min(F.col(c)).alias("_mn%d" % i))
             aggs.append(F.max(F.col(c)).alias("_mx%d" % i))
         for ci, c in enumerate(bcs):
-            for i in range(k):
-                pos = F.pmod(
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    _bloom_canon_expr(df, c),
-                                    F.lit(":%d" % i),
-                                )
-                            ),
-                            1,
-                            15,
-                        ),
-                        16,
-                        10,
-                    ).cast("long"),
-                    F.lit(m_bits),
-                ).cast("int")
+            canon = _bloom_canon_expr(df, c)
+            for i in range(_BLOOM_K):
                 aggs.append(
-                    F.collect_set(pos).alias("p_%d_%d" % (ci, i))
+                    F.collect_set(_bloom_position_col(canon, i))
+                    .alias("p_%d_%d" % (ci, i))
                 )
         rows = (
             df.groupBy(F.input_file_name().alias("_f"))
@@ -1623,40 +1473,21 @@ def _distributed_file_indexes(
                 stats_out[rel] = st
             per_col = {}
             for ci, c in enumerate(bcs):
-                bits = bytearray(m_bits // 8)
+                bits = bytearray(_BLOOM_M // 8)
                 any_pos = False
-                for i in range(k):
+                for i in range(_BLOOM_K):
                     for pos in r["p_%d_%d" % (ci, i)] or []:
                         bits[pos // 8] |= 1 << (pos % 8)
                         any_pos = True
                 if any_pos:
                     per_col[c] = {
-                        "m": m_bits,
-                        "k": k,
+                        "m": _BLOOM_M,
+                        "k": _BLOOM_K,
                         "b64": base64.b64encode(bytes(bits)).decode(),
                     }
             if per_col:
                 bloom_out[rel] = per_col
     return stats_out, bloom_out
-
-
-def _enrich_seg(
-    spark, fs, table_dir, new_files, seg_data, stats_cols, bloom_cols,
-    schema_json,
-):
-    """Attach write-time per-file indexes (min/max stats, equality
-    blooms) to a freshly written segment sidecar — ONE distributed job
-    over the DELTA files only, shared by both index kinds (fused scan,
-    guide §1.2: don't run two passes where one suffices)."""
-    if stats_cols or bloom_cols:
-        st, bl = _distributed_file_indexes(
-            spark, fs, table_dir, new_files, stats_cols, bloom_cols,
-            schema_json=schema_json,
-        )
-        if stats_cols:
-            seg_data["file_stats"] = st
-        if bloom_cols:
-            seg_data["file_blooms"] = bl
 
 
 def _index_defaults(prev, stats_cols, bloom_cols, schema_json=None):
@@ -2456,10 +2287,15 @@ class _Stage:
         sc, bc = _index_defaults(self.base, stats_cols, bloom_cols, schema_json)
         if self.files:
             seg_data = {"files": self.files, "file_sizes": self.sizes}
-            _enrich_seg(
-                spark, self.fs, self.table_dir, self.files, seg_data,
-                sc, bc, schema_json,
+            # one fused scan over the staged files feeds both index kinds
+            st, bl = _distributed_file_indexes(
+                spark, self.fs, self.table_dir, self.files, sc, bc,
+                schema_json=schema_json,
             )
+            if sc:
+                seg_data["file_stats"] = st
+            if bc:
+                seg_data["file_blooms"] = bl
             _stamp_fields(seg_data, fids)
             _write_seg(self.fs, self.table_dir, self.seg, seg_data)
         return sc, bc
@@ -3301,12 +3137,14 @@ def read_published(
     "as of" approximate exactly as in Delta/Iceberg).
 
     ``skip`` = ``{col: (lo, hi)}`` applies FILE-LEVEL data skipping
-    against the manifest's recorded footer statistics (see
-    :func:`collect_file_stats`): only files whose [min, max] for every
-    listed column intersects the bound are opened. Conservative by
-    construction — a file without recorded stats is always read — so
-    the caller still applies the row filter; skipping only shrinks the
-    file list (on a z-ordered snapshot, drastically).
+    against the recorded per-file min/max statistics (``stats_cols=``
+    at publish, or :func:`collect_file_stats`): only files whose
+    [min, max] for every listed column intersects the bound are opened.
+    Conservative by construction — a file without recorded stats is
+    always read — so the caller still applies the row filter; skipping
+    only shrinks the file list (on a z-ordered snapshot, drastically).
+    The rule is :func:`_skip_files`, shared with the
+    ``bamboo_published`` data source's ``skip``/``skip_eq`` options.
 
     ``skip_eq`` = ``{col: value}`` prunes for POINT predicates
     (``col = value``): a file is skipped when its recorded bloom
@@ -3342,50 +3180,15 @@ def read_published(
     if entry is None:
         _, entry = _select_snapshot(manifest, version, as_of_ms)
     res = _resolve_entry(fs, table_dir, entry)
-    entry = {**entry, "files": res["files"]}
-    if skip:
-        stats = res["file_stats"]
-
-        def _keep(f: str) -> bool:
-            st = stats.get(f)
-            if not st:
-                return True  # no stats: never skip blindly
-            for col, bound in skip.items():
-                mm = st.get(col)
-                if mm is None:
-                    continue
-                mn, mx = mm
-                lo, hi = bound
-                try:
-                    if (hi is not None and mn > hi) or (
-                        lo is not None and mx < lo
-                    ):
-                        return False
-                except TypeError:
-                    # incomparable types (e.g. a date bound against
-                    # ISO-string stats): stay conservative, read it
-                    continue
-            return True
-
-        entry["files"] = [f for f in entry["files"] if _keep(f)]
-    if skip_eq:
-        entry["files"] = _prune_eq(res, entry["files"], skip_eq)
-    if (skip or skip_eq) and entry.get("partition_by"):
-        # HIDDEN-PARTITIONING pruning: a bound/point predicate on a
-        # transform SOURCE column ("ts between …" on a days(ts) table,
-        # "id = X" on a bucket(N, id) table) prunes whole partition
-        # DIRECTORIES from the manifest list — the user never names the
-        # physical ts_day/id_bucket column. Identity partition columns
-        # prune by path value the same way (exact, even without stats).
-        entry["files"] = _pt_prune_files(
-            entry["files"], entry.get("partition_spec"),
-            entry.get("partition_by"), skip, skip_eq, spark,
-        )
+    files = _skip_files(
+        res, res["files"], skip, skip_eq, entry.get("partition_spec"),
+        entry.get("partition_by"), spark,
+    )
     return _read_files(
         spark,
         fs,
         table_dir,
-        entry["files"],
+        files,
         entry["schema"],
         bool(entry.get("partition_by")),
         dv=_load_dv(fs, table_dir, entry),
@@ -3393,28 +3196,83 @@ def read_published(
     )
 
 
-def _prune_eq(res: dict, files, skip_eq: dict):
-    """Files that may contain rows matching every ``col = value``
-    predicate, judged by per-file blooms and min/max stats
-    (conservative: an unindexed file always survives)."""
-    stats, blooms = res["file_stats"], res["file_blooms"]
-
-    def _keep(f: str) -> bool:
-        for col, value in skip_eq.items():
-            bl = (blooms.get(f) or {}).get(col)
-            if bl and not _bloom_might_contain(bl, value):
-                return False
-            mm = (stats.get(f) or {}).get(col)
-            if mm is not None:
-                mn, mx = mm
-                try:
-                    if value < mn or value > mx:
-                        return False
-                except TypeError:
-                    pass  # incomparable types: stay conservative
+def _range_may_match(mm, lo, hi) -> bool:
+    """False only when a file's recorded ``[min, max]`` provably misses
+    the bound ``[lo, hi]`` (a None end is open). Conservative: no
+    stats, or types that don't compare (a date bound against ISO-string
+    stats), keep the file."""
+    if mm is None:
+        return True
+    mn, mx = mm
+    try:
+        return not (
+            (hi is not None and mn > hi) or (lo is not None and mx < lo)
+        )
+    except TypeError:
         return True
 
-    return [f for f in files if _keep(f)]
+
+def _point_may_match(mm, bloom, value) -> bool:
+    """May a file with min/max ``mm`` and equality bloom ``bloom`` (each
+    None when unrecorded) hold ``col = value``? The range check runs
+    first, so a value outside the range is never hashed."""
+    return _range_may_match(mm, value, value) and (
+        not bloom or _bloom_might_contain(bloom, value)
+    )
+
+
+def _prune_eq(res: dict, files, skip_eq: dict):
+    """Files that may contain rows matching every ``col = value``
+    predicate, judged by per-file min/max stats and blooms
+    (conservative: an unindexed file always survives)."""
+    stats, blooms = res["file_stats"], res["file_blooms"]
+    return [
+        f
+        for f in files
+        if all(
+            _point_may_match(
+                (stats.get(f) or {}).get(c), (blooms.get(f) or {}).get(c), v
+            )
+            for c, v in skip_eq.items()
+        )
+    ]
+
+
+def _skip_files(
+    res: dict, files, skip=None, skip_eq=None, spec=None, partition_by=None,
+    spark=None,
+) -> list:
+    """THE file-skipping rule, on a resolved file list: ``skip`` =
+    ``{col: (lo, hi)}`` ranges against the per-file min/max, ``skip_eq``
+    = ``{col: value}`` points against min/max and blooms
+    (:func:`_prune_eq`), then both against hive partition paths
+    (:func:`_pt_prune_files`) when the snapshot is partitioned.
+    Conservative throughout — it only ever shrinks the list; callers
+    still apply the row filter."""
+    stats = res["file_stats"]
+    files = list(files)
+    if skip:
+        files = [
+            f
+            for f in files
+            if all(
+                _range_may_match((stats.get(f) or {}).get(c), *bound)
+                for c, bound in skip.items()
+            )
+        ]
+    if skip_eq:
+        files = _prune_eq(res, files, skip_eq)
+    if (skip or skip_eq) and partition_by:
+        # HIDDEN-PARTITIONING pruning: a bound/point predicate on a
+        # transform SOURCE column ("ts between …" on a days(ts) table,
+        # "id = X" on a bucket(N, id) table) prunes whole partition
+        # DIRECTORIES — the user never names the physical ts_day /
+        # id_bucket column. Identity partition columns prune by path
+        # value the same way (exact, even without stats).
+        files = _pt_prune_files(
+            files, spec, partition_by, skip, skip_eq, spark
+        )
+    return files
 
 
 def _read_files(
@@ -6186,31 +6044,18 @@ def compact_files(
 
 
 def _prune_key_candidates(res: dict, candidates, col: str, key_vals):
-    """Probe-scan pruning for a single-column key batch: drop files
-    whose recorded min/max RANGE excludes every batch key (wins big on
-    monotone keys — time/sequence-keyed tables localize a batch to a
-    few recent files), then files whose equality BLOOM proves every
-    batch key absent. Conservative by construction: no index, no
-    prune."""
-    stats = res.get("file_stats") or {}
+    """Probe-scan pruning for a single-column key batch: keep the files
+    that may hold ANY batch key — the any-key twin of
+    :func:`_prune_eq`, same per-file rule (min/max range first, which
+    wins big on monotone keys, then the equality bloom). Conservative by
+    construction: no index, no prune."""
+    stats, blooms = res["file_stats"], res["file_blooms"]
     kept = []
     for f in candidates:
         mm = (stats.get(f) or {}).get(col)
-        if mm is None:
+        bl = (blooms.get(f) or {}).get(col)
+        if any(_point_may_match(mm, bl, v) for v in key_vals):
             kept.append(f)
-            continue
-        mn, mx = mm
-        try:
-            if any(mn <= v <= mx for v in key_vals):
-                kept.append(f)
-        except TypeError:
-            kept.append(f)  # incomparable stats: stay conservative
-    if res.get("file_blooms"):
-        kept = [
-            f
-            for f in kept
-            if any(_prune_eq(res, [f], {col: v}) for v in key_vals)
-        ]
     return kept
 
 
@@ -7667,56 +7512,17 @@ def compact_delete_vectors(
         return st.commit(entry_of, rebase)
 
 
-def _footer_minmax(fs, path: str, cols) -> Optional[dict]:
-    """Per-file {col: [min, max]} from the parquet FOOTER statistics
-    (driver-side metadata read, no scan). Returns None when footer
-    stats are unavailable for the backend/path."""
-    local = None
-    if isinstance(fs, _PosixFS):
-        local = path
-    elif path.startswith("file:"):
-        local = path[len("file:"):]
-        while local.startswith("//"):
-            local = local[1:]
-    if local is None:
-        return None  # remote URI: stats skipped (documented fallback)
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(local).metadata
-    names = {md.schema.column(i).path: i for i in range(md.num_columns)}
-    out = {}
-    for c in cols:
-        i = names.get(c)
-        if i is None:
-            continue
-        lo = hi = None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(i).statistics
-            if st is None or not st.has_min_max:
-                return None  # stats missing: never skip blindly
-            mn, mx = st.min, st.max
-            lo = mn if lo is None or mn < lo else lo
-            hi = mx if hi is None or mx > hi else hi
-        if lo is not None:
-            if hasattr(lo, "isoformat"):
-                lo, hi = lo.isoformat(), hi.isoformat()
-            if isinstance(lo, bytes):
-                lo, hi = lo.decode("utf-8", "replace"), hi.decode("utf-8", "replace")
-            out[c] = [lo, hi]
-    return out or None
-
-
 def _phys_backfill_groups(manifest: dict, seg_data: dict, cols):
     """One segment's backfill read groups for a possibly-EVOLVED table:
-    ``[(files, physical cols, physical schema_json)]`` — the manifest's
-    LOGICAL index columns translated to each file's PHYSICAL names by
-    field id (the segment's stamped ``field_names``/``file_fields``
-    maps). Stats/bloom sidecars key physical names by convention;
-    ``_resolve_entry`` rekeys them to logical names at read time, so a
-    backfill after a rename still prunes. A column a file never had
-    (added after it was written) is skipped for that group — no stats
-    beats wrong stats. Pre-stamping files resolve as identity (their
-    physical names ARE their era's logical names)."""
+    ``[(files, {logical col: physical col}, physical schema_json)]`` —
+    the manifest's LOGICAL index columns translated to each file's
+    PHYSICAL names by field id (the segment's stamped ``field_names``/
+    ``file_fields`` maps). Stats/bloom sidecars key physical names by
+    convention; ``_resolve_entry`` rekeys them to logical names at read
+    time, so a backfill after a rename still prunes. A column a file
+    never had (added after it was written) is skipped for that group —
+    no stats beats wrong stats. Pre-stamping files resolve as identity
+    (their physical names ARE their era's logical names)."""
     ids, _ = _field_ids_of(manifest)
     types = {
         f["name"]: f
@@ -7750,13 +7556,74 @@ def _phys_backfill_groups(manifest: dict, seg_data: dict, cols):
             fd["name"] = p
             fields.append(fd)
         out.append(
-            (
-                fl,
-                sorted(phys.values()),
-                json.dumps({"type": "struct", "fields": fields}),
-            )
+            (fl, phys, json.dumps({"type": "struct", "fields": fields}))
         )
     return out
+
+
+def _backfill_indexes(table_dir: str, stats_cols, bloom_cols, spark, who):
+    """Backfill per-file min/max stats for ``stats_cols`` and equality
+    blooms for ``bloom_cols`` into every segment sidecar the committed
+    snapshot cites: ONE fused index scan per segment read group and
+    one sidecar rewrite per segment (an atomic replace; index addition
+    is monotone and conservative, and every snapshot citing the
+    segment sees it for free). Returns ``(n_stats, n_blooms)``, the
+    files that got each index. Waits out a held commit lease like any
+    writer, and heartbeats it so a long backfill is never TTL-evicted.
+    Segmented manifests only."""
+    stats_cols = list(stats_cols or [])
+    bloom_cols = list(bloom_cols or [])
+    fs = _fs_for(table_dir, spark)
+    lease = _Lease(fs, table_dir, heartbeat=True).acquire_wait(
+        wait_ms=_COMMIT_WAIT_MS
+    )
+    with lease:
+        manifest = _read_manifest(table_dir, fs)
+        if manifest is None:
+            raise ValueError("%s: no committed table here" % who)
+        if manifest.get("files") is not None:
+            raise ValueError(
+                "%s needs a segmented manifest — any publish migrates a "
+                "legacy table" % who
+            )
+        spark = spark or SparkSession.getActiveSession()
+        if spark is None:
+            raise RuntimeError(
+                "%s needs an active SparkSession (index collection is a "
+                "distributed job)" % who
+            )
+        cols = list(dict.fromkeys(stats_cols + bloom_cols))
+        n_stats = n_blooms = 0
+        for seg in manifest.get("segments") or []:
+            sdata = _load_seg(fs, table_dir, seg)
+            got_st: dict = {}
+            got_bl: dict = {}
+            # physical-name resolution by field id (evolved tables
+            # backfill exactly; never-evolved ones get identity and a
+            # column-pruned read schema for free)
+            for fl, phys, pschema in _phys_backfill_groups(
+                manifest, sdata, cols
+            ):
+                st, bl = _distributed_file_indexes(
+                    spark, fs, table_dir, fl,
+                    [phys[c] for c in stats_cols if c in phys],
+                    [phys[c] for c in bloom_cols if c in phys],
+                    schema_json=pschema,
+                )
+                got_st.update(st)
+                got_bl.update(bl)
+            if not (got_st or got_bl):
+                continue
+            for key, got in (("file_stats", got_st), ("file_blooms", got_bl)):
+                if got:
+                    have = dict(sdata.get(key) or {})
+                    for f, idx in got.items():
+                        have[f] = {**have.get(f, {}), **idx}
+                    sdata[key] = have
+            n_stats += len(got_st)
+            n_blooms += len(got_bl)
+            _write_seg(fs, table_dir, seg, sdata)
+        return n_stats, n_blooms
 
 
 def collect_file_stats(
@@ -7764,96 +7631,32 @@ def collect_file_stats(
     stats_cols,
     spark: Optional[SparkSession] = None,
 ) -> int:
-    """Record per-file min/max FOOTER statistics for ``stats_cols`` in
-    the committed manifest (one atomic manifest rewrite, no data
-    change; returns how many files got stats). This is the
-    data-skipping half of a table format: with stats recorded,
-    ``read_published(..., skip={"col": (lo, hi)})`` opens only the
-    files whose [min, max] intersects the bound — on a
-    ``zorder_layout``-clustered snapshot that's the file-level
-    min/max pruning that turns a 100 TB scan filtered on any
+    """Record per-file min/max statistics for ``stats_cols`` in the
+    committed snapshot's segment sidecars (no data change; returns how
+    many files got stats). This is the data-skipping half of a table
+    format: with stats recorded, ``read_published(..., skip={"col":
+    (lo, hi)})`` opens only the files whose [min, max] intersects the
+    bound — on a ``zorder_layout``-clustered snapshot that's the
+    file-level min/max pruning that turns a 100 TB scan filtered on any
     clustered dimension into a few files.
 
     Prefer ``stats_cols=`` on the publish itself: the executors just
     wrote the files, so write-time stats cost one column-pruned pass
     over the DELTA only. This function is the post-hoc/backfill path:
-    on segmented manifests it runs a distributed per-segment job
-    (works on every backend); legacy inline manifests use driver-side
-    footer reads (posix/file: only). Files without collectable stats
-    simply carry none and are never skipped — skipping is always
-    CONSERVATIVE."""
-    fs = _fs_for(table_dir, spark)
-    with _Lease(fs, table_dir):
-        manifest = _read_manifest(table_dir, fs)
-        if manifest is None:
-            raise ValueError("collect_file_stats: no committed table here")
-        if manifest.get("files") is None:
-            # segmented manifest: stats live in the per-version segment
-            # sidecars — update each referenced sidecar in place (an
-            # atomic replace; stats addition is monotone + conservative,
-            # and every snapshot citing the segment sees them for free).
-            # Collection is a DISTRIBUTED job per segment, so it works
-            # on every backend — but prefer stats_cols= on the publish
-            # itself (write-time, no second scan).
-            spark = spark or SparkSession.getActiveSession()
-            if spark is None:
-                raise RuntimeError(
-                    "collect_file_stats needs an active SparkSession "
-                    "(stats collection is a distributed job)"
-                )
-            n = 0
-            for seg in manifest.get("segments") or []:
-                s = _load_seg(fs, table_dir, seg)
-                # resolve logical index cols to each file's PHYSICAL
-                # names by field id (evolved tables backfill exactly;
-                # never-evolved tables get identity + a column-pruned
-                # read schema for free)
-                got: dict = {}
-                for fl, pcols, pschema in _phys_backfill_groups(
-                    manifest, s, list(stats_cols)
-                ):
-                    got.update(
-                        _distributed_file_stats(
-                            spark, fs, table_dir, fl, pcols,
-                            schema_json=pschema,
-                        )
-                    )
-                if not got:
-                    continue
-                seg_stats = dict(s.get("file_stats") or {})
-                for f, mm in got.items():
-                    seg_stats[f] = {**seg_stats.get(f, {}), **mm}
-                    n += 1
-                s["file_stats"] = seg_stats
-                _write_seg(fs, table_dir, seg, s)
-            return n
-        # legacy inline manifest: stats embed in the manifest itself
-        stats = dict(manifest.get("file_stats") or {})
-        n = 0
-        for f in manifest["files"]:
-            mm = _footer_minmax(fs, _ref_path(fs, table_dir, f), list(stats_cols))
-            if mm:
-                stats[f] = {**stats.get(f, {}), **mm}
-                n += 1
-        manifest["file_stats"] = stats
-        # keep history entry for the current version in sync
-        cur = str(manifest["version"])
-        if cur in manifest.get("snapshots", {}):
-            manifest["snapshots"][cur]["file_stats"] = stats
-        fs.replace_with(
-            json.dumps(manifest),
-            _manifest_path(table_dir, fs),
-            ".tmp.stats",
-        )
-        return n
+    one distributed scan per segment (every backend), waiting out a
+    held commit lease. Segmented manifests only — a legacy inline
+    manifest raises ValueError; any publish migrates it. Files without
+    collectable stats simply carry none and are never skipped —
+    skipping is always CONSERVATIVE."""
+    return _backfill_indexes(
+        table_dir, stats_cols, None, spark, "collect_file_stats"
+    )[0]
 
 
 def collect_file_blooms(
     table_dir: str,
     bloom_cols,
     spark: Optional[SparkSession] = None,
-    m_bits: int = _BLOOM_M,
-    k: int = _BLOOM_K,
 ) -> int:
     """Backfill per-file EQUALITY blooms for ``bloom_cols`` into the
     committed snapshot's segment sidecars (returns files indexed).
@@ -7862,47 +7665,13 @@ def collect_file_blooms(
     ``read_published(skip_eq={'col': v})`` and
     ``delete_publish(..., point=...)`` open only the files that may
     contain the value — the point-lookup/point-delete index min/max
-    stats can't provide on unclustered data. Segmented manifests only
-    (legacy tables: run any publish first to migrate)."""
-    fs = _fs_for(table_dir, spark)
-    with _Lease(fs, table_dir):
-        manifest = _read_manifest(table_dir, fs)
-        if manifest is None:
-            raise ValueError("collect_file_blooms: no committed table here")
-        if manifest.get("files") is not None:
-            raise ValueError(
-                "collect_file_blooms needs a segmented manifest — any "
-                "publish migrates a legacy table"
-            )
-        spark = spark or SparkSession.getActiveSession()
-        if spark is None:
-            raise RuntimeError(
-                "collect_file_blooms needs an active SparkSession"
-            )
-        n = 0
-        for seg in manifest.get("segments") or []:
-            sdata = _load_seg(fs, table_dir, seg)
-            # physical-name resolution by field id (see
-            # _phys_backfill_groups) — evolved tables backfill exactly
-            got: dict = {}
-            for fl, pcols, pschema in _phys_backfill_groups(
-                manifest, sdata, list(bloom_cols)
-            ):
-                got.update(
-                    _distributed_file_blooms(
-                        spark, fs, table_dir, fl, pcols,
-                        schema_json=pschema, m_bits=m_bits, k=k,
-                    )
-                )
-            if not got:
-                continue
-            seg_blooms = dict(sdata.get("file_blooms") or {})
-            for f, bl in got.items():
-                seg_blooms[f] = {**seg_blooms.get(f, {}), **bl}
-                n += 1
-            sdata["file_blooms"] = seg_blooms
-            _write_seg(fs, table_dir, seg, sdata)
-        return n
+    stats can't provide on unclustered data. One distributed scan per
+    segment, waiting out a held commit lease. Segmented manifests only
+    (legacy tables raise ValueError: run any publish first to
+    migrate)."""
+    return _backfill_indexes(
+        table_dir, None, bloom_cols, spark, "collect_file_blooms"
+    )[1]
 
 
 def replace_files_publish(
@@ -8013,12 +7782,15 @@ def optimize_table(
     table runs nightly: fold fragmented partitions
     (:func:`compact_partitions`; byte-targeted :func:`compact` for
     unpartitioned tables, skipped when already a single right-sized
-    version), refresh footer statistics for ``stats_cols``
-    (:func:`collect_file_stats`), and GC unreferenced version dirs
-    (:func:`vacuum`). Returns a summary dict
-    ``{compacted_version, stats_files, vacuumed}``. Each step is an
-    ordinary atomic commit, so a crash between steps leaves a
-    consistent table that the next run finishes."""
+    version), backfill min/max stats for ``stats_cols`` and blooms for
+    ``bloom_cols`` (one scan per segment for both, as
+    :func:`collect_file_stats` / :func:`collect_file_blooms`; it waits
+    out a held commit lease), fold delete vectors, and GC unreferenced
+    version dirs (:func:`vacuum`). Returns a summary dict
+    ``{compacted_version, compact_conflict, stats_files, bloom_files,
+    dv_folded_version, vacuumed}``. Each step is an ordinary atomic
+    commit, so a crash between steps leaves a consistent table that the
+    next run finishes."""
     fs = _fs_for(table_dir, spark)
     manifest = _read_manifest(table_dir, fs)
     if manifest is None:
@@ -8053,17 +7825,14 @@ def optimize_table(
             )
     except ConcurrentWriteError as e:
         compacted, conflict = None, str(e)
-    # index backfills resolve evolved schemas by field id since round
-    # 11 (see _phys_backfill_groups) — run them unconditionally
-    n_stats = (
-        collect_file_stats(table_dir, stats_cols, spark)
-        if stats_cols
-        else 0
-    )
-    n_blooms = (
-        collect_file_blooms(table_dir, bloom_cols, spark)
-        if bloom_cols
-        else 0
+    # one fused backfill scan per segment for both index kinds; it
+    # resolves evolved schemas by field id (see _phys_backfill_groups)
+    n_stats, n_blooms = (
+        _backfill_indexes(
+            table_dir, stats_cols, bloom_cols, spark, "optimize_table"
+        )
+        if stats_cols or bloom_cols
+        else (0, 0)
     )
     # fold accumulated delete-vector sidecars into one dataset (no-op
     # when zero-or-one; a lost race is routine maintenance, retried

@@ -17,7 +17,6 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "bamboo_spark",
     master: str | None = None,
-    ui: bool = False,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", "local[%s]" % cpus)
@@ -62,7 +61,7 @@ def get_spark(
         # testdata events.ts is TIMESTAMP(NANOS) parquet, which Spark
         # rejects by default; read as long and convert at load time
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "true" if ui else "false")
+        .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("BAMBOO_DRIVER_MEM", "8g"))
     )

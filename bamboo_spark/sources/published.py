@@ -465,6 +465,12 @@ def _parse_json_option(options: dict, key: str) -> dict:
     return out
 
 
+def _pinned_res(p: dict) -> dict:
+    """A pinned snapshot's per-file indexes, keyed like a resolved
+    manifest entry."""
+    return {"file_stats": p["stats"], "file_blooms": p["blooms"]}
+
+
 class _PublishedBatchReader(DataSourceReader):
     """SNAPSHOT-PINNED reader: the manifest is resolved ONCE (in the
     DataSource constructor, driver-side) and every action on the loaded
@@ -489,60 +495,26 @@ class _PublishedBatchReader(DataSourceReader):
         #                        blooms, dv} — plain picklable data
         self._skip = dict(skip or {})
         self._eq = dict(skip_eq or {})
-        self._lo: dict = {}
-        self._hi: dict = {}
-        for c, bound in self._skip.items():
-            lo, hi = bound
-            if lo is not None:
-                self._lo[c] = lo
-            if hi is not None:
-                self._hi[c] = hi
 
-    def partitions(self) -> List[InputPartition]:
-        from bamboo_spark.operators.publish import _prune_eq
+    def _files(self) -> List[str]:
+        """The pinned file list after the shared skipping rule
+        (:func:`~bamboo_spark.operators.publish._skip_files`): ranges,
+        points, and hidden-partition paths — the planning driver's
+        active session gives bucket probes hash parity (absent →
+        conservative)."""
+        from pyspark.sql import SparkSession
+
+        from bamboo_spark.operators.publish import _skip_files
 
         p = self._pinned
-        files = list(p["files"])
-        res = {"file_stats": p["stats"], "file_blooms": p["blooms"]}
-        if self._eq:
-            files = _prune_eq(res, files, self._eq)
-        if self._lo or self._hi:
-            stats = p["stats"]
-            cols = set(self._lo) | set(self._hi)
+        return _skip_files(
+            _pinned_res(p), p["files"], self._skip, self._eq,
+            p.get("partition_spec"), p["partition_by"],
+            SparkSession.getActiveSession(),
+        )
 
-            def _keep(f: str) -> bool:
-                st = stats.get(f) or {}
-                for c in cols:
-                    mm = st.get(c)
-                    if mm is None:
-                        continue
-                    mn, mx = mm
-                    lo, hi = self._lo.get(c), self._hi.get(c)
-                    try:
-                        if (hi is not None and mn > hi) or (
-                            lo is not None and mx < lo
-                        ):
-                            return False
-                    except TypeError:
-                        pass  # incomparable: stay conservative
-                return True
-
-            files = [f for f in files if _keep(f)]
-        if (self._skip or self._eq) and p.get("partition_by"):
-            # HIDDEN-PARTITIONING path pruning (mirrors
-            # read_published): a bound on a transform SOURCE column
-            # drops whole partition directories; runs on the driver
-            # during planning, where an active session is available
-            # for bucket-probe hash parity (absent → conservative)
-            from pyspark.sql import SparkSession
-
-            from bamboo_spark.operators.publish import _pt_prune_files
-
-            files = _pt_prune_files(
-                files, p.get("partition_spec"), p["partition_by"],
-                self._skip or None, self._eq or None,
-                SparkSession.getActiveSession(),
-            )
+    def partitions(self) -> List[InputPartition]:
+        p = self._pinned
         dv = p.get("dv") or {}
         return [
             _FilePartition(
@@ -553,7 +525,7 @@ class _PublishedBatchReader(DataSourceReader):
                 dv_ref=self._dv_ref(dv.get(f), f),
                 fields=_fields_for(p["schema"], p.get("evo"), f),
             )
-            for f in files
+            for f in self._files()
         ]
 
     def _dv_ref(self, v, rel: str) -> Optional[tuple]:
@@ -582,6 +554,13 @@ class _PublishedPushdownReader(_PublishedBatchReader):
     once per loaded DataFrame — a broader action after a filtered one
     on the SAME DataFrame reuses the pruned file list."""
 
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
+        # pushed bounds prune by min/max only, never by partition
+        # path: pushed timestamps arrive in UTC, paths are in the
+        # session zone
+        self._ranges: dict = {}
+
     def pushFilters(self, filters):
         for f in filters:
             try:
@@ -589,13 +568,21 @@ class _PublishedPushdownReader(_PublishedBatchReader):
             except Exception:
                 col = None
             if col is not None:
+                lo, hi = self._ranges.get(col, (None, None))
                 if isinstance(f, EqualTo):
                     self._eq[col] = f.value
                 elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                    self._lo[col] = f.value
+                    self._ranges[col] = (f.value, hi)
                 elif isinstance(f, (LessThan, LessThanOrEqual)):
-                    self._hi[col] = f.value
+                    self._ranges[col] = (lo, f.value)
             yield f  # unsupported: Spark keeps the row-side filter
+
+    def _files(self) -> List[str]:
+        from bamboo_spark.operators.publish import _skip_files
+
+        return _skip_files(
+            _pinned_res(self._pinned), super()._files(), self._ranges
+        )
 
 
 def _cdf_schema_json(schema_json: str) -> str:

@@ -657,25 +657,16 @@ def test_ingest_concurrent_with_maintenance(spark, tmp_path, monkeypatch):
 
 
 def test_bloom_positions_python_matches_spark(spark):
-    """The pure-Python position function and the Spark expression must
-    agree bit-for-bit — the driver plans with one, executors built with
-    the other."""
+    """The pure-Python position function and the Spark position column
+    the index build uses must agree bit-for-bit — the driver plans
+    with one, executors built with the other."""
     import pyspark.sql.functions as F
 
     vals = ["alpha", "beta", "42", "x y"]
     m, k = P._BLOOM_M, P._BLOOM_K
     df = spark.createDataFrame([(v,) for v in vals], "s string")
     for i in range(k):
-        pos = F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("s"), F.lit(":%d" % i))), 1, 15
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(m),
-        ).cast("int")
+        pos = P._bloom_position_col(F.col("s"), i)
         got = {
             r["s"]: r["p"] for r in df.select("s", pos.alias("p")).collect()
         }

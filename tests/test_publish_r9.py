@@ -499,6 +499,20 @@ def _to_inline(t):
     P._SEG_CACHE.clear()
 
 
+def test_index_backfills_need_a_segmented_manifest(spark, tmp_path):
+    """Both backfills refuse a legacy inline manifest with the same
+    error; the table stays readable, and any publish migrates it."""
+    t = str(tmp_path / "tbl")
+    atomic_publish(spark.range(10).selectExpr("id").repartition(2), t)
+    _to_inline(t)
+    for backfill in (P.collect_file_stats, P.collect_file_blooms):
+        with pytest.raises(ValueError, match="needs a segmented manifest"):
+            backfill(t, ["id"], spark)
+    assert read_published(spark, t).count() == 10
+    append_publish(spark.range(10, 12, numPartitions=1).selectExpr("id"), t)
+    assert P.collect_file_stats(t, ["id"], spark) == 3
+
+
 def test_restore_to_inline_snapshot_reconciles_sidecars(spark, tmp_path):
     """Restore to a pre-migration INLINE snapshot on a table whose dirs
     gained sidecars from a later migration: the next append must

@@ -53,8 +53,9 @@ def _jobs(spark, name, fn):
 
 
 # Jobs each call below launched on the commit before the publish
-# flavors shared one staging path. A refactor may lower them; raising
-# one is a regression this test must catch.
+# flavors shared one staging path (the index backfills: before they
+# shared one index scan; optimize_table: after). A refactor may
+# lower them; raising one is a regression these tests must catch.
 _PINNED_JOBS = {
     "atomic_publish": 2,
     "append_publish": 2,
@@ -63,7 +64,20 @@ _PINNED_JOBS = {
     "compact": 5,
     "replace_partitions_publish": 2,
     "append_branch": 2,
+    # on a 4-segment table: one scan per segment, two jobs each
+    "collect_file_stats": 8,
+    "collect_file_blooms": 8,
+    # both index kinds, still one scan per segment (16 when each kind
+    # scanned every segment on its own)
+    "optimize_table": 8,
 }
+
+
+def _assert_pinned(got):
+    over = {
+        k: (n, _PINNED_JOBS[k]) for k, n in got.items() if n > _PINNED_JOBS[k]
+    }
+    assert not over, "jobs (now, pinned) rose: %s; all: %s" % (over, got)
 
 
 def test_publish_job_counts_pinned(spark, tmp_path):
@@ -98,12 +112,70 @@ def test_publish_job_counts_pinned(spark, tmp_path):
         if name == "append_branch":
             P.create_branch(t, "b", spark=spark)
         got[name] = _jobs(spark, name, call)
-    over = {k: (got[k], n) for k, n in _PINNED_JOBS.items() if got[k] > n}
-    assert not over, "jobs (now, pinned) rose: %s; all: %s" % (over, got)
+    _assert_pinned(got)
     rows = {r.k: r.v for r in read_published(spark, t).collect()}
     assert rows[1] == 7 and 77 in rows
     # merged away 2, dv-deleted 5, partition 3 replaced without 43, 47
     assert not {2, 5, 43, 47} & set(rows) and len(rows) == 47
+
+
+def test_index_backfill_job_counts_pinned(spark, tmp_path):
+    """Both backfills and optimize_table index every segment with one
+    fused scan, whichever index kinds they were asked for."""
+    t = str(tmp_path / "t")
+    atomic_publish(_kvp(spark, 0, 40), t)
+    for lo in (40, 80, 120):
+        append_publish(_kvp(spark, lo, lo + 40), t)
+    n_files = len(P.live_files(t, spark=spark))
+    out = {}
+    calls = {
+        "collect_file_stats": lambda: out.update(
+            stats=P.collect_file_stats(t, ["k"], spark)
+        ),
+        "collect_file_blooms": lambda: out.update(
+            blooms=P.collect_file_blooms(t, ["p"], spark)
+        ),
+        "optimize_table": lambda: out.update(
+            opt=P.optimize_table(
+                spark, t, stats_cols=["v"], bloom_cols=["k"], min_files=99
+            )
+        ),
+    }
+    _assert_pinned({name: _jobs(spark, name, fn) for name, fn in calls.items()})
+    assert out["stats"] == out["blooms"] == n_files
+    assert out["opt"]["compacted_version"] is None
+    assert out["opt"]["stats_files"] == out["opt"]["bloom_files"] == n_files
+    fs = P._fs_for(t, spark)
+    res = P._resolve_entry(fs, t, P._read_manifest(t, fs))
+    for f in res["files"]:
+        assert set(res["file_stats"][f]) == {"k", "v"}
+        assert set(res["file_blooms"][f]) == {"p", "k"}
+    hit = read_published(spark, t, skip_eq={"k": 77})
+    assert len(hit.inputFiles()) < n_files
+    assert hit.where("k = 77").count() == 1
+
+
+def test_optimize_table_waits_out_a_held_commit_lease(spark, tmp_path):
+    """Another writer holds the commit lease for a moment: the index
+    backfill waits for it like any commit does, and the delete-vector
+    fold and vacuum after it still run."""
+    t = str(tmp_path / "t")
+    atomic_publish(_kvp(spark, 0, 40), t)
+    delete_publish(spark, t, "k = 5", delete_vectors=True)
+    delete_publish(spark, t, "k = 35", delete_vectors=True)
+    fs = P._fs_for(t, spark)
+    held = P._Lease(fs, t).acquire()
+    releaser = threading.Timer(1.5, held.release)
+    releaser.start()
+    try:
+        out = P.optimize_table(
+            spark, t, stats_cols=["k"], bloom_cols=["k"], min_files=99
+        )
+    finally:
+        releaser.join()
+    assert out["stats_files"] == out["bloom_files"] > 0
+    assert out["dv_folded_version"] is not None
+    assert read_published(spark, t).count() == 38
 
 
 def _data_refs_only(t, spark):

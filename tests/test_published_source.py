@@ -214,6 +214,73 @@ def test_skip_options_prune_safely(src, spark, tmp_path):
     assert rng.count() == 101
 
 
+def _index_table(spark, t, kind):
+    """``flat``: 8 range-clustered files, stats on k, blooms on k and s.
+    ``hidden``: days(ts) partitions, stats on k, blooms on tag."""
+    if kind == "hidden":
+        df = spark.range(60).select(
+            F.col("id").alias("k"),
+            F.expr(
+                "timestamp '2024-03-01 00:30:00' + make_interval("
+                "0, 0, 0, cast(id % 6 as int), cast(id % 4 as int), 0, 0)"
+            ).alias("ts"),
+            F.concat(F.lit("cat"), (F.col("id") % 3).cast("string")).alias(
+                "tag"
+            ),
+        )
+        atomic_publish(
+            df, t, partition_by=["days(ts)"], stats_cols=["k"],
+            bloom_cols=["tag"],
+        )
+    else:
+        df = spark.range(200).select(
+            F.col("id").alias("k"), (F.col("id") % 7).cast("string").alias("s")
+        ).repartitionByRange(8, "k")
+        atomic_publish(df, t, stats_cols=["k"], bloom_cols=["k", "s"])
+
+
+@pytest.mark.parametrize(
+    "kind, skip, skip_eq, prunes",
+    [
+        ("flat", {"k": [150, None]}, None, True),
+        ("flat", {"k": [None, 40]}, None, True),
+        ("flat", {"k": [60, 90]}, {"s": "3"}, True),
+        ("flat", None, {"k": 77}, True),
+        ("flat", {"k": ["a", None]}, None, False),
+        ("hidden", {"ts": ["2024-03-02", "2024-03-03T23:00:00"]}, None, True),
+        ("hidden", {"ts": [None, "2024-03-02"]}, {"tag": "cat1"}, True),
+    ],
+    ids=["lo_only", "hi_only", "range_and_point", "point", "incomparable",
+         "hidden_range", "hidden_half_open_and_point"],
+)
+def test_skip_options_open_the_files_read_published_opens(
+    src, spark, tmp_path, kind, skip, skip_eq, prunes
+):
+    """read_published and the DataSource load options apply one
+    skipping rule: for the same bounds they open the same files."""
+    import json
+
+    from bamboo_spark.operators import publish as P
+    from bamboo_spark.sources.published import PublishedTableDataSource
+
+    t = str(tmp_path / "tbl")
+    _index_table(spark, t, kind)
+    live = P.live_files(t, spark=spark)
+    want_df = read_published(spark, t, skip=skip, skip_eq=skip_eq)
+    want = sorted(P._rel_of(u, live) for u in want_df.inputFiles())
+    opts = {
+        key: json.dumps(val)
+        for key, val in (("skip", skip), ("skip_eq", skip_eq))
+        if val is not None
+    }
+    ds = PublishedTableDataSource({"path": t, **opts})
+    got = sorted(p.rel for p in ds.reader(ds.schema()).partitions())
+    assert got == want
+    assert (len(want) < len(live)) == prunes, (len(want), len(live))
+    loaded = spark.read.format("bamboo_published").options(**opts).load(t)
+    assert loaded.count() == want_df.count()
+
+
 def test_batch_read_masks_delete_vectors(src, spark, tmp_path):
     """Merge-on-read deletes round-trip through the DataSource exactly
     as through read_published."""

@@ -12,7 +12,7 @@ def main():
     tag = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("plan_dump", ui=False)
+    spark = get_spark("plan_dump")
     reg = _q._queries_raw()
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13")
     os.makedirs(out_dir, exist_ok=True)

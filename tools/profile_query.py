@@ -1,7 +1,8 @@
 """Per-query profiler for optimization work: times registry queries in
 the bench's warm-isolated mode (caches drained first) and reports
 job/stage counts, task time, shuffle bytes and the slowest stages from
-the Spark UI REST API — the measurement loop of guide §1.
+the driver's status store (``spark_metrics.measure``) — the measurement
+loop of guide §1.
 
 Usage:
     python tools/profile_query.py q_name [q_name ...] [--repeat N]
@@ -18,26 +19,18 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bamboo_spark import queries as _q
 from bamboo_spark.operators import release_caches
 from bamboo_spark.session import get_spark
-
-
-def _api(base: str, path: str):
-    with urllib.request.urlopen(base + path) as r:
-        return json.load(r)
+from spark_metrics import measure
 
 
 def profile(names, sf_dir, repeat=1):
-    spark = get_spark("bamboo_profile", ui=True)
+    spark = get_spark("bamboo_profile")
     registry = _q._queries_raw()
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    base = "%s/api/v1/applications/%s" % (ui, app_id)
 
     # warmup (same as bench.py): absorb process-global JVM costs
     for wq in ("q1_pricing_summary", "simhash_signatures", "pack_chunks"):
@@ -54,50 +47,32 @@ def profile(names, sf_dir, repeat=1):
         best = None
         for _ in range(repeat):
             release_caches()
-            jobs_before = {j["jobId"] for j in _api(base, "/jobs")}
-            stages_before = {
-                (s["stageId"], s["attemptId"]) for s in _api(base, "/stages")
-            }
-            spark.sparkContext.setJobDescription("profile:" + name)
             t0 = time.perf_counter()
             df = registry[name](spark, sf_dir)
             t_build = time.perf_counter() - t0
-            df.write.format("noop").mode("overwrite").save()
-            wall = time.perf_counter() - t0
-            spark.sparkContext.setJobDescription(None)
-            jobs = [j for j in _api(base, "/jobs") if j["jobId"] not in jobs_before]
-            stages = [
-                s
-                for s in _api(base, "/stages")
-                if (s["stageId"], s["attemptId"]) not in stages_before
-            ]
-            n_tasks = sum(s.get("numCompleteTasks", 0) for s in stages)
-            task_ms = sum(s.get("executorRunTime", 0) for s in stages)
-            sh_r = sum(s.get("shuffleReadBytes", 0) for s in stages)
-            sh_w = sum(s.get("shuffleWriteBytes", 0) for s in stages)
-            slowest = sorted(
-                stages,
-                key=lambda s: -(
-                    s.get("completionTime") is not None
-                    and s.get("executorRunTime", 0)
-                    or 0
-                ),
-            )[:6]
+
+            def run():
+                df.write.format("noop").mode("overwrite").save()
+                return time.perf_counter()
+
+            t1, n_jobs, stages = measure(spark, "profile:" + name, run)
+            wall = t1 - t0
+            slowest = sorted(stages, key=lambda s: -s["run_s"])[:6]
             rec = {
                 "wall_s": round(wall, 2),
                 "build_s": round(t_build, 2),
-                "jobs": len(jobs),
+                "jobs": n_jobs,
                 "stages": len(stages),
-                "tasks": n_tasks,
-                "task_time_s": round(task_ms / 1000.0, 1),
-                "shuffle_read_mb": round(sh_r / 1e6, 1),
-                "shuffle_write_mb": round(sh_w / 1e6, 1),
+                "tasks": sum(s["tasks"] for s in stages),
+                "task_time_s": round(sum(s["run_s"] for s in stages), 1),
+                "shuffle_read_mb": round(
+                    sum(s["shuffle_read_b"] for s in stages) / 1e6, 1
+                ),
+                "shuffle_write_mb": round(
+                    sum(s["shuffle_write_b"] for s in stages) / 1e6, 1
+                ),
                 "slow_stages": [
-                    (
-                        round(s.get("executorRunTime", 0) / 1000.0, 1),
-                        s.get("numCompleteTasks", 0),
-                        (s.get("description") or s.get("name", ""))[:90],
-                    )
+                    (round(s["run_s"], 1), s["tasks"], s["name"][:90])
                     for s in slowest
                 ],
             }

@@ -1,10 +1,11 @@
 """10x scale rehearsal (round-12 verdict #7): run the isolated
 heavy-family queries once against a synthetic 10x documents table
 (sf0.1's 5k docs -> 50k docs) and record wall time, SHUFFLE BYTES
-(read+write summed over the query's stages, from the Spark UI REST
-API) and peak execution memory — the cheapest way to catch a hidden
-scale cliff (quadratic pair growth, a shuffle that outgrows the box,
-an accumulating driver structure) before any bigger SF ever runs.
+(read+write summed over the query's stages, from the driver's status
+store via ``spark_metrics.measure``) and peak execution memory — the
+cheapest way to catch a hidden scale cliff (quadratic pair growth, a
+shuffle that outgrows the box, an accumulating driver structure)
+before any bigger SF ever runs.
 
 The replicas are PERTURBED, not copied: every 5th word of replica i
 gets an ``_r<i>`` suffix, so ~60% of each doc's 3-shingles change and
@@ -26,11 +27,12 @@ import os
 import sys
 import tempfile
 import time
-import urllib.request
 
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
+
+from spark_metrics import measure
 
 # the round-12 verdict's isolated top-5 plus the rest of the heavy
 # dedup/contamination/graph family and this round's sampled twin
@@ -99,11 +101,6 @@ def build_rehearsal_dir(spark, sf_dir: str, reps: int = 10) -> str:
     return out
 
 
-def _stages(app_base: str):
-    with urllib.request.urlopen(app_base + "/stages", timeout=10) as r:
-        return json.loads(r.read().decode())
-
-
 def main() -> None:
     sf_dir = "/root/testdata/sf0.1"
     queries = DEFAULT_QUERIES
@@ -116,20 +113,13 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     from bamboo_spark.session import get_spark
 
-    spark = get_spark("bamboo_scale_rehearsal", ui=True)
+    spark = get_spark("bamboo_scale_rehearsal")
     from bamboo_spark import queries as _q
     from bamboo_spark.operators import release_caches
 
     registry = _q._queries_raw()
     rehearsal_dir = build_rehearsal_dir(spark, sf_dir)
     print("rehearsal dir: %s" % rehearsal_dir, flush=True)
-
-    ui = spark.sparkContext.uiWebUrl
-    with urllib.request.urlopen(
-        ui + "/api/v1/applications", timeout=10
-    ) as r:
-        app_id = json.loads(r.read().decode())[0]["id"]
-    base = "%s/api/v1/applications/%s" % (ui, app_id)
 
     # warmup (JVM/codegen/Arrow pool) on the SMALL corpus
     registry["dedup_jaccard"](spark, sf_dir).write.format(
@@ -139,26 +129,23 @@ def main() -> None:
 
     results = {}
     for name in queries:
-        seen = {s["stageId"] for s in _stages(base)}
         release_caches()
         t0 = time.perf_counter()
-        registry[name](spark, rehearsal_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        wall = round(time.perf_counter() - t0, 1)
+
+        def run():
+            registry[name](spark, rehearsal_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            return time.perf_counter()
+
+        t1, _, new = measure(spark, name, run)
+        wall = round(t1 - t0, 1)
         release_caches()
-        new = [s for s in _stages(base) if s["stageId"] not in seen]
         shuffle_b = sum(
-            s.get("shuffleWriteBytes", 0) + s.get("shuffleReadBytes", 0)
-            for s in new
+            s["shuffle_write_b"] + s["shuffle_read_b"] for s in new
         )
-        peak_mem = max(
-            (s.get("peakExecutionMemory", 0) for s in new), default=0
-        )
-        spill = sum(
-            s.get("memoryBytesSpilled", 0) + s.get("diskBytesSpilled", 0)
-            for s in new
-        )
+        peak_mem = max((s["peak_mem_b"] for s in new), default=0)
+        spill = sum(s["spill_b"] for s in new)
         results[name] = {
             "wall_s": wall,
             "shuffle_mb": round(shuffle_b / 1e6, 1),
